@@ -171,7 +171,7 @@ object Bench {
     // nothing. Emit a compact (<500 B) one-line JSON LAST with the headline
     // numbers and a pointer to the full artifact; the per-query line above
     // is unchanged (additions only, old consumers keep working).
-    val compact = s"""{"total":$total,"n":${results.size},"failed":$failedJson,"sf":"$sfDir","cpus":$cpus,"artifact":"$out"}"""
+    val compact = s"""{"total":$total,"n":${results.size},"failed_queries":$failedJson,"sf":"$sfDir","cpus":"$cpus","artifact":"$out"}"""
     println(compact)
     spark.stop()
   }

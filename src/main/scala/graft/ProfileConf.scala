@@ -14,6 +14,16 @@ object ProfileConf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // parsed before the session starts, so a malformed value fails at once
+    val overrides = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";")).filter(_.trim.nonEmpty).map { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) if k.trim.nonEmpty => (k.trim, v.trim)
+          case _ => throw new IllegalArgumentException(
+            s"SPARK_GRAFT_CONF segment '$kv' is not key=value; " +
+              "usage: SPARK_GRAFT_CONF=\"key=value;key=value\"")
+        }
+      }
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -21,11 +31,10 @@ object ProfileConf {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
+    overrides.foreach { case (k, v) =>
+      spark.conf.set(k, v)
       System.err.println(s"[profileconf] $k=$v")
-    })
+    }
     for (n <- args.toSeq) {
       val fn = SparkEntry.queries(n)
       val times = (1 to 4).map { _ =>

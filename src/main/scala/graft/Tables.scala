@@ -127,7 +127,10 @@ object Tables {
     if (cur >= p) df
     else {
       val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      val byData = (bytes / bytesPerTask).toLong + 1
+      // clamped before .toLong: plan stats are unbounded BigInts (a cross
+      // join multiplies its sides), and a wrapped quotient would disable
+      // widening
+      val byData = (bytes / bytesPerTask).min(BigInt(p)).toLong + 1
       val width = math.max(cur.toLong, math.min(p.toLong, byData)).toInt
       if (width <= cur) df else df.repartition(width, keys: _*)
     }

@@ -928,8 +928,6 @@ object Dedup {
       labels = next.select(col("doc_id"), col("lab"))
       converged = changed == 0
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"CC round $iter changed=$changed")
     }
     // Unconverged labels are WRONG labels (a >maxIters-diameter chain
     // would silently split one true duplicate group into several) — fail

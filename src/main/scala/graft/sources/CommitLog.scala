@@ -245,14 +245,6 @@ object CommitLog {
   private def checkpointFile(table: String, v: Long): Path =
     logDir(table).resolve(f"c$v%012d.json")
 
-  /** Latest checkpoint version ≤ `v`, or -1 if none. */
-  private def latestCheckpointAtOrBefore(table: String, v: Long,
-                                         store: LogStore): Long =
-    store.list(logDir(table)).flatMap(p => p.getFileName.toString match {
-      case CheckpointRe(c) if c.toLong <= v => Some(c.toLong)
-      case _                                => None
-    }).foldLeft(-1L)(math.max)
-
   /** Full table state at a version: live files (insertion-ordered), their
     * recorded index-column bounds, the per-application txn high-water
     * marks, and the UNION of every committed schema (first-appearance
@@ -327,10 +319,6 @@ object CommitLog {
     }
   }
 
-  /** Replay through `v`, seeded from the latest checkpoint ≤ `v` when one
-    * exists — replay cost is then O(commits since checkpoint), not
-    * O(table lifetime); the pre-checkpoint commit files aren't even
-    * opened (CommitLogSpec proves this by corrupting them). */
   /** The union of two occurrences of one column's type, nullability-wise:
     * the same STRUCTURE with differing array/map/struct nullability flags
     * merges to the more-nullable form (a parquet-seeded table and a
@@ -360,16 +348,150 @@ object CommitLog {
     }
   }
 
-  private[sources] def replay(table: String, v: Long, store: LogStore): State = {
-    val st = State(mutable.LinkedHashSet.empty, mutable.Map.empty,
-      mutable.Map.empty, mutable.LinkedHashMap.empty)
-    val cp = latestCheckpointAtOrBefore(table, v, store)
-    if (cp >= 0)
-      decode(store.read(checkpointFile(table, cp))).foreach(st.apply)
-    ((cp + 1) to v).foreach { i =>
-      decode(store.read(versionFile(table, i))).foreach(st.apply)
+  /** The table at one version — the handle every operation plans
+    * against. [[open]] lists `_log` ONCE, which yields both the tip and
+    * every checkpoint; `st` then replays through `version`, seeded from
+    * the latest checkpoint ≤ `version` when one exists — replay cost is
+    * then O(commits since checkpoint), not O(table lifetime); the
+    * pre-checkpoint commit files aren't even opened (CommitLogSpec proves
+    * this by corrupting them). The replay is lazy, so a handle that only
+    * needs the tip (or re-addresses another version with [[at]], which
+    * reuses the listing) never replays.
+    *
+    * Every scan, discovery and rewrite an operation runs goes through the
+    * handle, so they all read the same file set under the same log-carried
+    * schema: files written before a column was added read it as NULL, and
+    * a predicate may reference such a column. */
+  private[sources] final class TableAt(val table: String, val tip: Long,
+                                       val version: Long,
+                                       checkpoints: Seq[Long],
+                                       val store: LogStore) {
+    lazy val st: State = {
+      val st = State(mutable.LinkedHashSet.empty, mutable.Map.empty,
+        mutable.Map.empty, mutable.LinkedHashMap.empty)
+      val cp = checkpoints.filter(_ <= version).foldLeft(-1L)(math.max)
+      if (cp >= 0)
+        decode(store.read(checkpointFile(table, cp))).foreach(st.apply)
+      ((cp + 1) to version).foreach { i =>
+        decode(store.read(versionFile(table, i))).foreach(st.apply)
+      }
+      st
     }
-    st
+
+    /** The same listing addressed at another version (time travel). */
+    def at(v: Long): TableAt = {
+      require(v <= tip, s"version $v does not exist (tip is $tip)")
+      new TableAt(table, tip, v, checkpoints, store)
+    }
+
+    /** `files` under the snapshot's schema (`extra` fields appended), no
+      * deletion vectors applied. */
+    def scan(spark: SparkSession, files: Seq[String],
+             extra: Seq[org.apache.spark.sql.types.StructField] = Nil): DataFrame = {
+      val reader = st.schemaStruct match {
+        case Some(s) => spark.read.schema(
+          org.apache.spark.sql.types.StructType(s.fields ++ extra))
+        case None    => spark.read
+      }
+      reader.parquet(files.map(f => Paths.get(table, f).toString): _*)
+    }
+
+    /** [[scan]] through every live deletion vector, keeping the (file,
+      * position) key columns the merge-on-read writers stage as masks. */
+    def keyed(spark: SparkSession, files: Seq[String]): DataFrame =
+      dvMaskKeyed(spark, table, st, dvKeyed(scan(spark, files)), files)
+
+    /** Read `files` with every live deletion vector applied — THE read
+      * primitive once a table carries DVs: a position-keyed anti-join
+      * against the (broadcast) mask, zero work when no sidecar is live
+      * (the plan is the plain scan, byte-identical to the pre-DV engine). */
+    def masked(spark: SparkSession, files: Seq[String]): DataFrame =
+      if (st.dvs.isEmpty) scan(spark, files)
+      else keyed(spark, files).drop(DvFile, DvPos)
+
+    /** Every live row. */
+    def rows(spark: SparkSession): DataFrame = {
+      require(st.live.nonEmpty, s"$table has no live files at v$version")
+      masked(spark, st.live.toSeq)
+    }
+
+    /** The files among `files` holding a live row that `hit` selects and,
+      * with `keys`, whose key columns match a key row — the discovery scan
+      * every copy-on-write rewrite runs first. The file identity is
+      * captured at the scan, BEFORE any join: `input_file_name()`
+      * projected after a join silently returns "" whenever the planner
+      * picks a shuffle join (the row leaves its scan task), and no file
+      * would match. On a DV-carrying table the scan reads through the
+      * mask (a dv-deleted row must neither trigger a rewrite nor be
+      * resurrected by one), and the metadata file-name column, captured at
+      * scan time, is the same identity. */
+    def touchedFiles(spark: SparkSession, files: Seq[String],
+                     hit: org.apache.spark.sql.Column,
+                     keys: Option[(DataFrame, Seq[String])] = None): Seq[String] = {
+      import org.apache.spark.sql.functions.{col, input_file_name}
+      if (files.isEmpty) return Nil
+      val names: Set[String] =
+        if (st.dvs.isEmpty) {
+          val matched = scan(spark, files).where(hit)
+          (keys match {
+            case None => matched.select(input_file_name().as("__f"))
+            case Some((k, kc)) =>
+              matched.select(kc.map(col) :+ input_file_name().as("__f"): _*)
+                .join(k, kc, "left_semi")
+          }).select("__f").distinct().collect()
+            .map(r => Paths.get(new java.net.URI(r.getString(0)).getPath)
+              .getFileName.toString).toSet
+        } else {
+          val matched = keyed(spark, files).where(hit)
+          keys.fold(matched) { case (k, kc) => matched.join(k, kc, "left_semi") }
+            .select(DvFile).distinct().collect().map(_.getString(0)).toSet
+        }
+      files.filter(f => names.contains(Paths.get(f).getFileName.toString))
+    }
+
+    /** Whether a mutation records change files: the `cdc` table property
+      * makes that a TABLE decision — a forgotten per-call flag can no
+      * longer starve the feed. */
+    def cdcOn(flag: Boolean): Boolean =
+      flag || st.props.get("cdc").contains("true")
+
+    /** The CHECK constraints staged rows must satisfy: name → predicate. */
+    def checks: Map[String, String] = constraintsOf(st.props)
+
+    /** The merge-on-read actions masking `hits` (a [[keyed]] frame the
+      * caller pinned, so the sidecar, the refs and any CDC rows all see
+      * the same row set): one staged `dv` sidecar of (file, position)
+      * pairs, then one `dvref` per masked data file, sorted — the conflict
+      * metadata a racing rewrite of a masked file hits (see [[commit]]).
+      * Empty when nothing matched. */
+    def dvActions(spark: SparkSession, hits: DataFrame): Seq[Action] = {
+      import org.apache.spark.sql.functions.col
+      val perFile = hits.groupBy(DvFile).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1))
+      if (perFile.isEmpty) Nil
+      else stage(spark, table,
+          hits.select(col(DvFile).as("file"), col(DvPos).as("pos")).repartition(1))
+        .map(_.copy(op = "dv")) ++
+        perFile.sortBy(_._1).map { case (name, n) => Action("dvref", s"data/$name", n) }
+    }
+
+    /** Retire every live sidecar (masks die with the data they mask). */
+    def retireSidecars: Seq[Action] =
+      st.dvs.toSeq.map(p => Action("dvremove", p, st.dvRowsOf.getOrElse(p, 0L)))
+
+    /** Retire the whole live table: every data file and every sidecar. */
+    def retireAll: Seq[Action] =
+      st.live.toSeq.map(Action("remove", _, 0L)) ++ retireSidecars
+  }
+
+  /** The table at `asOf` (default: the tip) from one `_log` listing. A
+    * table with no commits opens at version -1 with an empty state. */
+  private[sources] def open(table: String, store: LogStore,
+                            asOf: Option[Long] = None): TableAt = {
+    val names = store.list(logDir(table)).map(_.getFileName.toString)
+    val tip = names.collect { case VersionRe(v) => v.toLong }.foldLeft(-1L)(math.max)
+    val checkpoints = names.collect { case CheckpointRe(c) => c.toLong }
+    new TableAt(table, tip, tip, checkpoints, store).at(asOf.getOrElse(tip))
   }
 
   /** Per-commit provenance marker: every commit this object writes leads
@@ -434,10 +556,8 @@ object CommitLog {
   }
 
   /** The table's committed properties at the tip (last writer wins). */
-  def tableProperties(table: String, store: LogStore = LocalStore): Map[String, String] = {
-    val tip = latestVersion(table, store)
-    if (tip < 0) Map.empty else replay(table, tip, store).props.toMap
-  }
+  def tableProperties(table: String, store: LogStore = LocalStore): Map[String, String] =
+    open(table, store).st.props.toMap
 
   // CHECK constraints ride the property mechanism: key `constraint.<name>`,
   // value = URL-safe unpadded base64 of the SQL predicate (the alphabet is
@@ -451,14 +571,10 @@ object CommitLog {
   private def constraintsOf(props: collection.Map[String, String]): Map[String, String] =
     props.collect { case (k, v) if k.startsWith(ConstraintPrefix) =>
       k.stripPrefix(ConstraintPrefix) -> unB64url(v) }.toMap
-  private def checksAt(table: String, store: LogStore): Map[String, String] = {
-    val tip = latestVersion(table, store)
-    if (tip < 0) Map.empty else constraintsOf(replay(table, tip, store).props)
-  }
 
   /** The table's CHECK constraints at the tip: name → SQL predicate. */
   def constraints(table: String, store: LogStore = LocalStore): Map[String, String] =
-    checksAt(table, store)
+    open(table, store).checks
 
   /** THE house CHECK rule, in one place: a row violates when its
     * predicate is false OR NULL (CHECK must hold; unknown does not hold
@@ -493,17 +609,11 @@ object CommitLog {
   def addConstraint(spark: SparkSession, table: String, name: String,
                     predicate: String, store: LogStore = LocalStore): Long = {
     require(name.matches("[A-Za-z0-9_]+"), s"constraint name must be a plain token: $name")
-    val tip = latestVersion(table, store)
-    require(tip >= 0, s"$table does not exist — append first")
-    val st = replay(table, tip, store)
-    if (st.live.nonEmpty) {
-      val reader = st.schemaStruct match {
-        case Some(s) => spark.read.schema(s)
-        case None    => spark.read
-      }
-      val live = reader
-        .parquet(st.live.toSeq.map(f => Paths.get(table, f).toString): _*)
-      checkViolations(live, Map(name -> predicate)).foreach { case (n, p, bad) =>
+    val snap = open(table, store)
+    require(snap.version >= 0, s"$table does not exist — append first")
+    if (snap.st.live.nonEmpty) {
+      checkViolations(snap.scan(spark, snap.st.live.toSeq),
+          Map(name -> predicate)).foreach { case (n, p, bad) =>
         if (bad > 0) throw new ConstraintViolationException(
           s"cannot add CHECK constraint $n ($p): " +
             s"$bad existing rows violate it — nothing was committed")
@@ -511,7 +621,7 @@ object CommitLog {
     }
     commit(table, Seq(infoAct("constraint"),
       Action("prop", s"$ConstraintPrefix$name=${b64url(predicate)}", 0L)),
-      readVersion = tip, store)
+      readVersion = snap.version, store)
   }
 
   /** ALTER TABLE DROP CONSTRAINT: removes the named constraint via the
@@ -532,11 +642,8 @@ object CommitLog {
     * legacy log that never committed a meta action. */
   def tableSchema(table: String, asOf: Option[Long] = None,
                   store: LogStore = LocalStore): Option[org.apache.spark.sql.types.StructType] = {
-    val tip = latestVersion(table, store)
-    if (tip < 0) return None
-    val v = asOf.getOrElse(tip)
-    require(v <= tip, s"version $v does not exist (tip is $tip)")
-    replay(table, v, store).schemaStruct
+    val snap = open(table, store)
+    if (snap.tip < 0) None else asOf.fold(snap)(snap.at).st.schemaStruct
   }
 
   /** Snapshot of the table through `asOf` (default: tip). Add-then-removed
@@ -544,19 +651,15 @@ object CommitLog {
     * single commit never adds AND removes the same path. */
   def snapshot(table: String, asOf: Option[Long] = None,
                store: LogStore = LocalStore): Snapshot = {
-    val tip = latestVersion(table, store)
-    val v = asOf.getOrElse(tip)
-    require(v <= tip, s"version $v does not exist (tip is $tip)")
-    Snapshot(v, replay(table, v, store).live.toSeq)
+    val snap = open(table, store, asOf)
+    Snapshot(snap.version, snap.st.live.toSeq)
   }
 
   /** Highest batch id committed for `appId` (-1 if none) — the idempotence
     * cursor [[appendOnce]] checks. */
   def txnHighWater(table: String, appId: String,
-                   store: LogStore = LocalStore): Long = {
-    val tip = latestVersion(table, store)
-    if (tip < 0) -1L else replay(table, tip, store).txns.getOrElse(appId, -1L)
-  }
+                   store: LogStore = LocalStore): Long =
+    open(table, store).st.txns.getOrElse(appId, -1L)
 
   /** Roll the state at the current tip into a checkpoint file so replay
     * (and conflict checking) stops scanning at the checkpoint. Published
@@ -564,13 +667,12 @@ object CommitLog {
     * harmless (first wins; the state content for a version is a pure
     * function of the log, so any winner wrote the same thing). */
   def checkpoint(table: String, store: LogStore = LocalStore): Long = {
-    val tip = latestVersion(table, store)
-    require(tip >= 0, s"$table has no commits to checkpoint")
-    val st = replay(table, tip, store)
-    val acts = st.liveActions ++
-      st.txns.toSeq.sortBy(_._1).map { case (app, b) => Action("txn", app, b) }
-    store.putIfAbsent(checkpointFile(table, tip), encode(acts))
-    tip
+    val snap = open(table, store)
+    require(snap.version >= 0, s"$table has no commits to checkpoint")
+    val acts = snap.st.liveActions ++
+      snap.st.txns.toSeq.sortBy(_._1).map { case (app, b) => Action("txn", app, b) }
+    store.putIfAbsent(checkpointFile(table, snap.version), encode(acts))
+    snap.version
   }
 
   // --- deletion vectors (merge-on-read) --------------------------------------
@@ -627,7 +729,7 @@ object CommitLog {
     * pruned read actually joins against). */
   def dvMaskRowsFor(spark: SparkSession, table: String, files: Seq[String],
                     store: LogStore = LocalStore): Long = {
-    val st = replay(table, latestVersion(table, store), store)
+    val st = open(table, store).st
     if (st.dvs.isEmpty) 0L else dvMaskFrame(spark, table, st, files).count()
   }
 
@@ -656,22 +758,6 @@ object CommitLog {
     }
   }
 
-  /** Read `files` under the snapshot's schema with every live deletion
-    * vector applied — THE read primitive once a table carries DVs: a
-    * position-keyed anti-join against the (broadcast) mask, zero work
-    * when no sidecar is live (the plan is the plain scan, byte-identical
-    * to the pre-DV engine). */
-  private[sources] def maskedRead(spark: SparkSession, table: String, st: State,
-                         files: Seq[String]): DataFrame = {
-    val reader = st.schemaStruct match {
-      case Some(s) => spark.read.schema(s)
-      case None    => spark.read
-    }
-    val base = reader.parquet(files.map(f => Paths.get(table, f).toString): _*)
-    if (st.dvs.isEmpty) base
-    else dvMaskKeyed(spark, table, st, dvKeyed(base), files).drop(DvFile, DvPos)
-  }
-
   /** Live deletion-vector sidecars at a version (log path → masked-
     * position count) — the observability hook: `sum(counts)` against the
     * table's row count tells an operator when [[compact]] (which
@@ -679,10 +765,7 @@ object CommitLog {
     * mask lifecycle on it. */
   def deletionVectors(table: String, asOf: Option[Long] = None,
                       store: LogStore = LocalStore): Seq[(String, Long)] = {
-    val tip = latestVersion(table, store)
-    val v = asOf.getOrElse(tip)
-    require(v <= tip, s"version $v does not exist (tip is $tip)")
-    val st = replay(table, v, store)
+    val st = open(table, store, asOf).st
     st.dvs.toSeq.map(p => p -> st.dvRowsOf.getOrElse(p, 0L))
   }
 
@@ -693,29 +776,24 @@ object CommitLog {
     * applied as of the requested version — time travel to a pre-DV
     * version shows the rows back, the same contract as copy-on-write. */
   def read(spark: SparkSession, table: String, asOf: Option[Long] = None,
-           store: LogStore = LocalStore): DataFrame = {
-    val tip = latestVersion(table, store)
-    val v = asOf.getOrElse(tip)
-    require(v <= tip, s"version $v does not exist (tip is $tip)")
-    val st = replay(table, v, store)
-    require(st.live.nonEmpty, s"$table has no live files at v$v")
+           store: LogStore = LocalStore): DataFrame =
     // The log's schema (as of v — time travel reads the columns that
     // existed THEN) is authoritative: files written before a column was
     // added read it as NULL; no footer-merging pass is ever needed.
-    maskedRead(spark, table, st, st.live.toSeq)
-  }
+    open(table, store, asOf).rows(spark)
 
-  /** Pre-flight schema check + the meta action an append-shaped commit
-    * carries: merging the frame's schema into the CURRENT table schema
-    * throws the typed conflict BEFORE anything is staged. Returns the
-    * tip the check covered — the commit's conflict scan starts AFTER it
-    * (only the commits that RACE this one are re-read; an append never
-    * scans table history). */
-  private def metaFor(table: String, df: DataFrame,
-                      store: LogStore): (Long, Action) = {
-    val tip = latestVersion(table, store)
-    if (tip >= 0) replay(table, tip, store).mergeSchema(df.schema)
-    (tip, Action("meta", schemaToken(df.schema), 0L))
+  /** An append-shaped commit at `snap`: merging the frame's schema into
+    * the snapshot's throws the typed conflict BEFORE anything is staged,
+    * `stageWith` stages the rows under the snapshot's CHECK constraints,
+    * and the commit carries the frame's schema as a meta action (then
+    * `extra`). The commit's conflict scan starts AFTER the snapshot's
+    * version (only the commits that RACE this one are re-read; an append
+    * never scans table history). */
+  private def appendAt(snap: TableAt, df: DataFrame, extra: Seq[Action] = Nil)
+                      (stageWith: Map[String, String] => Seq[Action]): Long = {
+    if (snap.version >= 0) snap.st.mergeSchema(df.schema)
+    commit(snap.table, (infoAct("append") +: Action("meta", schemaToken(df.schema), 0L) +:
+      stageWith(snap.checks)) ++ extra, readVersion = snap.version, snap.store)
   }
 
   /** Stage `df` as immutable uuid-named files under `data/` and return the
@@ -1046,12 +1124,8 @@ object CommitLog {
     * every concurrent commit, so the rebase loop never conflicts — under
     * contention every append lands, each at its own version). */
   def append(spark: SparkSession, table: String, df: DataFrame,
-             store: LogStore = LocalStore): Long = {
-    val (tip, meta) = metaFor(table, df, store)
-    commit(table, infoAct("append") +: meta +:
-      stage(spark, table, df, checks = checksAt(table, store)),
-      readVersion = tip, store)
-  }
+             store: LogStore = LocalStore): Long =
+    appendAt(open(table, store), df)(checks => stage(spark, table, df, checks = checks))
 
   /** Atomic CREATE: stage the frame, then claim EXACTLY version 0 with one
     * `putIfAbsent` — never the rebase loop, so two racing creators cannot
@@ -1103,22 +1177,22 @@ object CommitLog {
                 cdc: Boolean = false,
                 store: LogStore = LocalStore): Long = {
     import org.apache.spark.sql.functions.lit
-    val (tip, meta) = metaFor(table, df, store)
-    if (tip < 0) // nothing to replace: an overwrite of no table is a create
-      return commit(table, infoAct("append") +: meta +:
-        stage(spark, table, df, indexCol), readVersion = -1L, store)
-    val st = replay(table, tip, store)
-    val adds = stage(spark, table, df, indexCol,
-      checks = constraintsOf(st.props))
-    val cdcOn = cdc || st.props.get("cdc").contains("true")
+    val snap = open(table, store)
+    if (snap.version < 0) // nothing to replace: an overwrite of no table is a create
+      return appendAt(snap, df)(checks => stage(spark, table, df, indexCol, checks = checks))
+    val st = snap.st
+    // the typed conflict BEFORE staging, checked on a copy: the retracted
+    // rows below read under the table's own schema
+    st.copy(schema = st.schema.clone()).mergeSchema(df.schema)
+    val adds = stage(spark, table, df, indexCol, checks = snap.checks)
     val cdcActs =
-      if (!cdcOn || st.live.isEmpty) Nil
+      if (!snap.cdcOn(cdc) || st.live.isEmpty) Nil
       else {
         // old rows retract, new rows insert — both sides full-fidelity.
         // The new side re-reads the STAGED files (not the input plan), so
         // a non-deterministic frame cannot make the feed diverge from
         // the table (the stage-time CHECK rationale, applied to CDC).
-        val oldRows = maskedRead(spark, table, st, st.live.toSeq)
+        val oldRows = snap.masked(spark, st.live.toSeq)
           .withColumn("_change_type", lit("delete"))
         // An empty frame can stage ZERO files (a truncate-shaped
         // overwrite); reading an empty path list throws schema-inference
@@ -1133,10 +1207,8 @@ object CommitLog {
             allowMissingColumns = true)
         stageChanges(spark, table, feed)
       }
-    val removes = st.live.toSeq.map(Action("remove", _, 0L)) ++
-      st.dvs.toSeq.map(p => Action("dvremove", p, st.dvRowsOf.getOrElse(p, 0L)))
-    commit(table, infoAct("overwrite") +: meta +: (removes ++ adds ++ cdcActs),
-      readVersion = tip, store)
+    commit(table, infoAct("overwrite") +: Action("meta", schemaToken(df.schema), 0L) +:
+      (snap.retireAll ++ adds ++ cdcActs), readVersion = snap.version, store)
   }
 
   /** Append with data-skipping stats: each staged file's add-action
@@ -1149,25 +1221,29 @@ object CommitLog {
     * the domain). This is the commit-log analog of the engine's bucket
     * partitioning everywhere else: metadata, not data, bounds the scan. */
   def appendIndexed(spark: SparkSession, table: String, df: DataFrame,
-                    indexCol: String, store: LogStore = LocalStore): Long = {
-    val (tip, meta) = metaFor(table, df, store)
-    commit(table, infoAct("append") +: meta +:
-      stage(spark, table, df, Some(indexCol), checks = checksAt(table, store)),
-      readVersion = tip, store)
-  }
+                    indexCol: String, store: LogStore = LocalStore): Long =
+    appendAt(open(table, store), df)(checks =>
+      stage(spark, table, df, Some(indexCol), checks = checks))
 
   /** Live files whose recorded index bounds overlap `[lo, hi]`, plus any
     * file with no recorded bounds (conservative: unknown = read it).
     * Exposed so specs assert pruning on the deterministic FILE COUNT, not
     * on byte metrics. */
   def prunedFiles(table: String, lo: Double, hi: Double,
-                  store: LogStore = LocalStore): Seq[String] = {
-    val tip = latestVersion(table, store)
-    val st = replay(table, tip, store)
+                  store: LogStore = LocalStore): Seq[String] =
+    boundsKeep(open(table, store).st, lo, hi)
+
+  private def boundsKeep(st: State, lo: Double, hi: Double): Seq[String] =
     st.live.toSeq.filter { p =>
       st.bounds.get(p).forall { case (flo, fhi) => fhi >= lo && flo <= hi }
     }
-  }
+
+  /** `pred` over the pruned `files` — or, when pruning kept none, a
+    * schema-stable empty result (the live set's schema, no rows). */
+  private def readPruned(spark: SparkSession, snap: TableAt, files: Seq[String],
+                         pred: org.apache.spark.sql.Column): DataFrame =
+    if (files.isEmpty) snap.rows(spark).where(org.apache.spark.sql.functions.lit(false))
+    else snap.masked(spark, files).where(pred)
 
   /** Range read with file skipping: open only the files [[prunedFiles]]
     * keeps, then apply the EXACT predicate — bounds select files, the
@@ -1178,17 +1254,9 @@ object CommitLog {
                 lo: Double, hi: Double,
                 store: LogStore = LocalStore): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val st = replay(table, latestVersion(table, store), store)
-    val files = st.live.toSeq.filter { p =>
-      st.bounds.get(p).forall { case (flo, fhi) => fhi >= lo && flo <= hi }
-    }
-    if (files.isEmpty) {
-      // schema-stable empty result: read the live set's schema, keep no rows
-      read(spark, table, None, store).where(org.apache.spark.sql.functions.lit(false))
-    } else {
-      maskedRead(spark, table, st, files)
-        .where(col(indexCol) >= lo && col(indexCol) <= hi)
-    }
+    val snap = open(table, store)
+    readPruned(spark, snap, boundsKeep(snap.st, lo, hi),
+      col(indexCol) >= lo && col(indexCol) <= hi)
   }
 
   /** Z-order clustered append with a multi-column zonemap: interleave the
@@ -1209,11 +1277,8 @@ object CommitLog {
                       clusterCols: Seq[String], files: Int,
                       store: LogStore = LocalStore): Long = {
     require(clusterCols.nonEmpty, "appendClustered needs cluster columns")
-    val (tip, meta) = metaFor(table, df, store)
-    commit(table, infoAct("append") +: meta +: stage(spark, table,
-      zcluster(df, clusterCols, files), None, clusterCols,
-      checks = checksAt(table, store)),
-      readVersion = tip, store)
+    appendAt(open(table, store), df)(checks =>
+      stage(spark, table, zcluster(df, clusterCols, files), None, clusterCols, checks))
   }
 
   /** The shared clustering shuffle: one column range-partitions directly,
@@ -1248,14 +1313,15 @@ object CommitLog {
     * conservative). Exposed so specs assert multi-dimension pruning on
     * deterministic file counts. */
   def prunedFilesBox(table: String, box: Map[String, (Double, Double)],
-                     store: LogStore = LocalStore): Seq[String] = {
-    val st = replay(table, latestVersion(table, store), store)
+                     store: LogStore = LocalStore): Seq[String] =
+    boxKeep(open(table, store).st, box)
+
+  private def boxKeep(st: State, box: Map[String, (Double, Double)]): Seq[String] =
     st.live.toSeq.filter { p =>
       val zone = st.zones.getOrElse(p, Map.empty)
       box.forall { case (c, (lo, hi)) =>
         zone.get(c).forall { case (flo, fhi) => fhi >= lo && flo <= hi } }
     }
-  }
 
   /** Multi-dimension box read: open only the files whose zonemap
     * overlaps the box on every queried column, then apply the exact
@@ -1266,19 +1332,11 @@ object CommitLog {
                    box: Map[String, (Double, Double)],
                    store: LogStore = LocalStore): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val st = replay(table, latestVersion(table, store), store)
-    val files = st.live.toSeq.filter { p =>
-      val zone = st.zones.getOrElse(p, Map.empty)
-      box.forall { case (c, (lo, hi)) =>
-        zone.get(c).forall { case (flo, fhi) => fhi >= lo && flo <= hi } }
-    }
+    val snap = open(table, store)
     val exact = box.toSeq.sortBy(_._1)
       .map { case (c, (lo, hi)) => col(c) >= lo && col(c) <= hi }
       .reduceOption(_ && _).getOrElse(lit(true))
-    if (files.isEmpty)
-      read(spark, table, None, store).where(lit(false))
-    else
-      maskedRead(spark, table, st, files).where(exact)
+    readPruned(spark, snap, boxKeep(snap.st, box), exact)
   }
 
   /** Append with a per-file BLOOM filter on `bloomCol` — the point-lookup
@@ -1299,12 +1357,9 @@ object CommitLog {
     * missing every file. */
   def appendBloomed(spark: SparkSession, table: String, df: DataFrame,
                     bloomCol: String, bits: Int = 1 << 17,
-                    store: LogStore = LocalStore): Long = {
-    val (tip, meta) = metaFor(table, df, store)
-    commit(table, infoAct("append") +: meta +: stage(spark, table, df,
-      checks = checksAt(table, store), bloom = Some((bloomCol, bits))),
-      readVersion = tip, store)
-  }
+                    store: LogStore = LocalStore): Long =
+    appendAt(open(table, store), df)(checks =>
+      stage(spark, table, df, checks = checks, bloom = Some((bloomCol, bits))))
 
   /** Driver-side probe positions for `value` — MUST match the staged
     * job's `pmod(xxhash64(cast(col as string), i), m)` exactly, so the
@@ -1389,8 +1444,7 @@ object CommitLog {
     * exposed so specs assert skipping on deterministic counts. */
   def prunedFilesBloom(table: String, column: String, value: Any,
                        store: LogStore = LocalStore): Seq[String] =
-    bloomKeeps(replay(table, latestVersion(table, store), store),
-      column, value)
+    bloomKeeps(open(table, store).st, column, value)
 
   /** Point-lookup read: open only the bloom-positive files, then apply
     * the exact typed equality (so a false positive costs one extra file
@@ -1402,12 +1456,9 @@ object CommitLog {
                       store: LogStore = LocalStore): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     require(value != null, "point lookup of NULL is never true under SQL equality")
-    val st = replay(table, latestVersion(table, store), store)
-    val files = bloomKeeps(st, column, value)
-    if (files.isEmpty)
-      read(spark, table, None, store).where(lit(false))
-    else
-      maskedRead(spark, table, st, files).where(col(column) === lit(value))
+    val snap = open(table, store)
+    readPruned(spark, snap, bloomKeeps(snap.st, column, value),
+      col(column) === lit(value))
   }
 
   /** Idempotent append keyed by (appId, batchId) — the exactly-once
@@ -1431,22 +1482,41 @@ object CommitLog {
     // codec's (\d+) decode rejects — reject it HERE, before it can land
     // in a commit and poison every subsequent read of the table
     require(batchId >= 0, s"batchId must be non-negative: $batchId")
-    // The high-water check covers every commit ≤ tip, so the commit's
-    // conflict scan starts AFTER tip — it only ever reads the commits
-    // that raced this one, never the table's history.
-    val tip = latestVersion(table, store)
-    val checks: Map[String, String] =
-      if (tip < 0) Map.empty
-      else {
-        val st = replay(table, tip, store)
-        if (st.txns.getOrElse(appId, -1L) >= batchId) return -1L
-        st.mergeSchema(df.schema) // typed conflict BEFORE staging
-        constraintsOf(st.props)
-      }
-    val acts = (infoAct("append") +: Action("meta", schemaToken(df.schema), 0L) +:
-      stage(spark, table, df, indexCol, checks = checks)) :+ Action("txn", appId, batchId)
-    try commit(table, acts, readVersion = tip, store)
+    // The high-water check covers every commit ≤ the snapshot, so the
+    // commit's conflict scan starts AFTER it — it only ever reads the
+    // commits that raced this one, never the table's history.
+    val snap = open(table, store)
+    if (snap.st.txns.getOrElse(appId, -1L) >= batchId) return -1L
+    try appendAt(snap, df, Seq(Action("txn", appId, batchId)))(checks =>
+      stage(spark, table, df, indexCol, checks = checks))
     catch { case _: TxnAlreadyApplied => -1L }
+  }
+
+  /** UPDATE cannot add columns: every SET target must be a table column. */
+  private def requireSetColumns(st: State,
+                                set: Map[String, org.apache.spark.sql.Column]): Unit =
+    set.keys.foreach(c => require(
+      st.schemaStruct.forall(_.fieldNames.contains(c)),
+      s"SET column $c is not a table column — UPDATE cannot add columns (use append/merge evolution)"))
+
+  /** The MERGE prelude shared by both forms: the table must hold rows, the
+    * source's schema must merge additively (typed conflict BEFORE staging
+    * or checkpointing; the snapshot's scans then read the evolved schema),
+    * and the source is pinned once (`localCheckpoint` — it feeds several
+    * plans and must not recompute differently per consumer) and rejected
+    * when it has duplicate keys (the MATCHED row would be ambiguous). */
+  private def mergeSource(snap: TableAt, source: DataFrame,
+                          keyCols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    require(snap.version >= 0, s"${snap.table} does not exist — append first")
+    require(snap.st.live.nonEmpty, s"nothing to merge into in ${snap.table}")
+    snap.st.mergeSchema(source.schema)
+    val src = source.localCheckpoint()
+    val dup = src.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
+      .where(col("n") > 1).limit(1).count()
+    require(dup == 0L,
+      s"source has duplicate keys on (${keyCols.mkString(", ")}) — MERGE match is ambiguous")
+    src
   }
 
   /** Copy-on-write row deletion (the right-to-be-forgotten primitive a
@@ -1471,52 +1541,21 @@ object CommitLog {
                   indexCol: Option[String] = None,
                   cdc: Boolean = false,
                   store: LogStore = LocalStore): Long = {
-    import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, not}
-    val version = latestVersion(table, store)
-    val st = replay(table, version, store)
-    require(st.live.nonEmpty, s"nothing to delete from in $table")
-    // the log schema applies here too: the predicate may reference a
-    // column added AFTER some live files were written (NULL there)
-    def reader = st.schemaStruct match {
-      case Some(s) => spark.read.schema(s)
-      case None    => spark.read
-    }
-    val files = st.live.toSeq
-    val paths = files.map(f => Paths.get(table, f).toString)
-    // On a DV-carrying table the discovery scan and the rewrite read both
-    // go through the mask: a dv-deleted row must neither trigger a rewrite
-    // nor be resurrected by one (input_file_name is unusable after the
-    // mask join — the metadata file-name column is the same identity,
-    // captured at scan time).
-    val affectedNames =
-      if (st.dvs.isEmpty)
-        reader.parquet(paths: _*)
-          .where(coalesce(predicate, lit(false)))
-          .select(input_file_name().as("f")).distinct().collect()
-          .map(r => Paths.get(new java.net.URI(r.getString(0)).getPath)
-            .getFileName.toString).toSet
-      else
-        dvMaskKeyed(spark, table, st, dvKeyed(reader.parquet(paths: _*)), st.live.toSeq)
-          .where(coalesce(predicate, lit(false)))
-          .select(DvFile).distinct().collect()
-          .map(_.getString(0)).toSet
-    if (affectedNames.isEmpty) return -1L
-    val affected = files.filter(f =>
-      affectedNames.contains(Paths.get(f).getFileName.toString))
-    val affectedDf = maskedRead(spark, table, st, affected)
-    val survivors = affectedDf.where(not(coalesce(predicate, lit(false))))
-    val adds = stage(spark, table, survivors, indexCol)
-    // the cdc table property makes change recording a TABLE decision, not
-    // a per-call one — a forgotten flag can no longer starve the feed
-    val cdcOn = cdc || st.props.get("cdc").contains("true")
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
+    val snap = open(table, store)
+    require(snap.st.live.nonEmpty, s"nothing to delete from in $table")
+    val hit = coalesce(predicate, lit(false))
+    val affected = snap.touchedFiles(spark, snap.st.live.toSeq, hit)
+    if (affected.isEmpty) return -1L
+    val affectedDf = snap.masked(spark, affected)
+    val adds = stage(spark, table, affectedDf.where(not(hit)), indexCol)
     val cdcActs =
-      if (!cdcOn) Nil
+      if (!snap.cdcOn(cdc)) Nil
       else stageChanges(spark, table,
-        affectedDf.where(coalesce(predicate, lit(false)))
-          .withColumn("_change_type", lit("delete")))
+        affectedDf.where(hit).withColumn("_change_type", lit("delete")))
     val removes = affected.map(Action("remove", _, 0L))
     commit(table, infoAct("delete") +: (removes ++ adds ++ cdcActs),
-      readVersion = version, store)
+      readVersion = snap.version, store)
   }
 
   /** Merge-on-read row deletion via a DELETION VECTOR — the scale path for
@@ -1527,7 +1566,7 @@ object CommitLog {
     * public precedent is Iceberg's position-delete files / Delta's
     * deletion vectors; the Spark-first realization is parquet's hidden
     * `_metadata.file_name` / `row_index` columns plus a broadcast
-    * anti-join on every subsequent read ([[maskedRead]]).
+    * anti-join on every subsequent read ([[TableAt.masked]]).
     *
     * Semantics are identical to [[deleteWhere]] from a reader's view:
     * NULL-predicate rows survive; time travel to a pre-delete version
@@ -1547,38 +1586,23 @@ object CommitLog {
                     predicate: org.apache.spark.sql.Column,
                     cdc: Boolean = false,
                     store: LogStore = LocalStore): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val version = latestVersion(table, store)
-    val st = replay(table, version, store)
-    require(st.live.nonEmpty, s"nothing to delete from in $table")
-    val reader = st.schemaStruct match {
-      case Some(s) => spark.read.schema(s)
-      case None    => spark.read
-    }
-    val paths = st.live.toSeq.map(f => Paths.get(table, f).toString)
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    val snap = open(table, store)
+    require(snap.st.live.nonEmpty, s"nothing to delete from in $table")
     // one masked scan finds the doomed positions; pinned so the sidecar,
     // the per-file refs and the CDC rows all see the SAME row set even
     // under a non-deterministic predicate
-    val hits = dvMaskKeyed(spark, table, st, dvKeyed(reader.parquet(paths: _*)), st.live.toSeq)
+    val hits = snap.keyed(spark, snap.st.live.toSeq)
       .where(coalesce(predicate, lit(false)))
       .localCheckpoint()
-    val perFile = hits.groupBy(DvFile).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-    if (perFile.isEmpty) return -1L
-    val dvActs = stage(spark, table,
-        hits.select(col(DvFile).as("file"), col(DvPos).as("pos"))
-          .repartition(1))
-      .map(_.copy(op = "dv"))
-    val dvRefActs = perFile.sortBy(_._1).map { case (name, n) =>
-      Action("dvref", s"data/$name", n)
-    }.toSeq
-    val cdcOn = cdc || st.props.get("cdc").contains("true")
+    val dvActs = snap.dvActions(spark, hits)
+    if (dvActs.isEmpty) return -1L
     val cdcActs =
-      if (!cdcOn) Nil
+      if (!snap.cdcOn(cdc)) Nil
       else stageChanges(spark, table,
         hits.drop(DvFile, DvPos).withColumn("_change_type", lit("delete")))
-    commit(table, infoAct("deletedv") +: (dvActs ++ dvRefActs ++ cdcActs),
-      readVersion = version, store)
+    commit(table, infoAct("deletedv") +: (dvActs ++ cdcActs),
+      readVersion = snap.version, store)
   }
 
   /** Merge-on-read UPDATE: the [[updateWhere]] semantics at
@@ -1598,45 +1622,28 @@ object CommitLog {
                     store: LogStore = LocalStore): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     require(set.nonEmpty, "updateWhereDv needs at least one SET column")
-    val version = latestVersion(table, store)
-    val st = replay(table, version, store)
-    require(st.live.nonEmpty, s"nothing to update in $table")
-    set.keys.foreach(c => require(
-      st.schemaStruct.forall(_.fieldNames.contains(c)),
-      s"SET column $c is not a table column — UPDATE cannot add columns (use append/merge evolution)"))
-    val reader = st.schemaStruct match {
-      case Some(s) => spark.read.schema(s)
-      case None    => spark.read
-    }
-    val paths = st.live.toSeq.map(f => Paths.get(table, f).toString)
-    val hits = dvMaskKeyed(spark, table, st, dvKeyed(reader.parquet(paths: _*)), st.live.toSeq)
+    val snap = open(table, store)
+    require(snap.st.live.nonEmpty, s"nothing to update in $table")
+    requireSetColumns(snap.st, set)
+    val hits = snap.keyed(spark, snap.st.live.toSeq)
       .where(coalesce(predicate, lit(false)))
       .localCheckpoint()
-    val perFile = hits.groupBy(DvFile).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-    if (perFile.isEmpty) return -1L
+    val dvActs = snap.dvActions(spark, hits)
+    if (dvActs.isEmpty) return -1L
     val matched = hits.drop(DvFile, DvPos)
     // RHS over the OLD row, exactly updateWhere's projection rule
     val post = matched.select(matched.columns.map { c =>
       set.get(c).map(_.as(c)).getOrElse(col(c))
     }.toSeq: _*)
-    val dvActs = stage(spark, table,
-        hits.select(col(DvFile).as("file"), col(DvPos).as("pos"))
-          .repartition(1))
-      .map(_.copy(op = "dv"))
-    val dvRefActs = perFile.sortBy(_._1).map { case (name, n) =>
-      Action("dvref", s"data/$name", n)
-    }.toSeq
-    val adds = stage(spark, table, post, checks = constraintsOf(st.props))
-    val cdcOn = cdc || st.props.get("cdc").contains("true")
+    val adds = stage(spark, table, post, checks = snap.checks)
     val cdcActs =
-      if (!cdcOn) Nil
+      if (!snap.cdcOn(cdc)) Nil
       else stageChanges(spark, table,
         matched.withColumn("_change_type", lit("update_preimage"))
           .unionByName(post.withColumn("_change_type", lit("update_postimage")),
             allowMissingColumns = true))
-    commit(table, infoAct("updatedv") +: (dvActs ++ dvRefActs ++ adds ++ cdcActs),
-      readVersion = version, store)
+    commit(table, infoAct("updatedv") +: (dvActs ++ adds ++ cdcActs),
+      readVersion = snap.version, store)
   }
 
   /** Merge-on-read MERGE (upsert): [[mergeInto]] semantics — `WHEN
@@ -1656,45 +1663,22 @@ object CommitLog {
   def mergeIntoDv(spark: SparkSession, table: String, source: DataFrame,
                   keyCols: Seq[String], cdc: Boolean = false,
                   store: LogStore = LocalStore): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit}
+    import org.apache.spark.sql.functions.{col, lit}
     require(keyCols.nonEmpty, "mergeIntoDv needs at least one key column")
-    val version = latestVersion(table, store)
-    require(version >= 0, s"$table does not exist — append first")
-    val st = replay(table, version, store)
-    require(st.live.nonEmpty, s"nothing to merge into in $table")
-    st.mergeSchema(source.schema) // typed conflict BEFORE staging
-    val src = source.localCheckpoint()
-    val dup = src.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
-      .where(col("n") > 1).limit(1).count()
-    require(dup == 0L,
-      s"source has duplicate keys on (${keyCols.mkString(", ")}) — MERGE match is ambiguous")
+    val snap = open(table, store)
+    val src = mergeSource(snap, source, keyCols)
     val keys = src.select(keyCols.map(col): _*)
-    def reader = st.schemaStruct match {
-      case Some(s) => spark.read.schema(s)
-      case None    => spark.read
-    }
-    val paths = st.live.toSeq.map(f => Paths.get(table, f).toString)
     // matched OLD rows through the existing mask, with their positions —
     // pinned: the sidecar, the refs and the CDC preimages must agree
-    val hits = dvMaskKeyed(spark, table, st, dvKeyed(reader.parquet(paths: _*)), st.live.toSeq)
+    val hits = snap.keyed(spark, snap.st.live.toSeq)
       .join(keys, keyCols, "left_semi")
       .localCheckpoint()
-    val perFile = hits.groupBy(DvFile).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-    val dvActs =
-      if (perFile.isEmpty) Nil // pure insert: no file holds a matching key
-      else stage(spark, table,
-          hits.select(col(DvFile).as("file"), col(DvPos).as("pos"))
-            .repartition(1))
-        .map(_.copy(op = "dv"))
-    val dvRefActs = perFile.sortBy(_._1).map { case (name, n) =>
-      Action("dvref", s"data/$name", n)
-    }.toSeq
+    // empty for a pure insert: no file holds a matching key
+    val dvActs = snap.dvActions(spark, hits)
     val meta = Action("meta", schemaToken(src.schema), 0L)
-    val adds = stage(spark, table, src, checks = constraintsOf(st.props))
-    val cdcOn = cdc || st.props.get("cdc").contains("true")
+    val adds = stage(spark, table, src, checks = snap.checks)
     val cdcActs =
-      if (!cdcOn) Nil
+      if (!snap.cdcOn(cdc)) Nil
       else {
         val matched = hits.drop(DvFile, DvPos)
         val matchedKeys = matched.select(keyCols.map(col): _*)
@@ -1707,9 +1691,8 @@ object CommitLog {
           pre.unionByName(post, allowMissingColumns = true)
             .unionByName(ins, allowMissingColumns = true))
       }
-    commit(table,
-      (infoAct("mergedv") +: meta +: (dvActs ++ dvRefActs)) ++ adds ++ cdcActs,
-      readVersion = version, store)
+    commit(table, (infoAct("mergedv") +: meta +: dvActs) ++ adds ++ cdcActs,
+      readVersion = snap.version, store)
   }
 
   /** Copy-on-write UPDATE: `UPDATE <table> SET col = expr, ... WHERE
@@ -1733,39 +1716,15 @@ object CommitLog {
                   indexCol: Option[String] = None,
                   cdc: Boolean = false,
                   store: LogStore = LocalStore): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, when}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(set.nonEmpty, "updateWhere needs at least one SET column")
-    val version = latestVersion(table, store)
-    val st = replay(table, version, store)
-    require(st.live.nonEmpty, s"nothing to update in $table")
-    def reader = st.schemaStruct match {
-      case Some(s) => spark.read.schema(s)
-      case None    => spark.read
-    }
-    set.keys.foreach(c => require(
-      st.schemaStruct.forall(_.fieldNames.contains(c)) ,
-      s"SET column $c is not a table column — UPDATE cannot add columns (use append/merge evolution)"))
-    val files = st.live.toSeq
-    val paths = files.map(f => Paths.get(table, f).toString)
+    val snap = open(table, store)
+    require(snap.st.live.nonEmpty, s"nothing to update in $table")
+    requireSetColumns(snap.st, set)
     val hit = coalesce(predicate, lit(false))
-    // masked discovery + masked rewrite on a DV-carrying table — same
-    // discipline as deleteWhere (a dv-deleted row is not a row)
-    val affectedNames =
-      if (st.dvs.isEmpty)
-        reader.parquet(paths: _*)
-          .where(hit)
-          .select(input_file_name().as("f")).distinct().collect()
-          .map(r => Paths.get(new java.net.URI(r.getString(0)).getPath)
-            .getFileName.toString).toSet
-      else
-        dvMaskKeyed(spark, table, st, dvKeyed(reader.parquet(paths: _*)), st.live.toSeq)
-          .where(hit)
-          .select(DvFile).distinct().collect()
-          .map(_.getString(0)).toSet
-    if (affectedNames.isEmpty) return -1L
-    val affected = files.filter(f =>
-      affectedNames.contains(Paths.get(f).getFileName.toString))
-    val affectedDf = maskedRead(spark, table, st, affected)
+    val affected = snap.touchedFiles(spark, snap.st.live.toSeq, hit)
+    if (affected.isEmpty) return -1L
+    val affectedDf = snap.masked(spark, affected)
     // every RHS evaluates against the OLD row: all `when`s are built over
     // the same input projection, never over each other's outputs
     val rewritten = affectedDf.select(affectedDf.columns.map { c =>
@@ -1777,11 +1736,9 @@ object CommitLog {
     // UPDATE can introduce new values: the rewritten files must satisfy
     // the table's CHECK constraints (survivor rows trivially pass — they
     // passed on their own write — so this only ever rejects SET output)
-    val adds = stage(spark, table, rewritten, indexCol,
-      checks = constraintsOf(st.props))
-    val cdcOn = cdc || st.props.get("cdc").contains("true")
+    val adds = stage(spark, table, rewritten, indexCol, checks = snap.checks)
     val cdcActs =
-      if (!cdcOn) Nil
+      if (!snap.cdcOn(cdc)) Nil
       else {
         // both images derive from the matched OLD rows — re-filtering the
         // rewritten frame would be wrong when SET touches a predicate column
@@ -1795,7 +1752,7 @@ object CommitLog {
       }
     val removes = affected.map(Action("remove", _, 0L))
     commit(table, infoAct("update") +: (removes ++ adds ++ cdcActs),
-      readVersion = version, store)
+      readVersion = snap.version, store)
   }
 
   /** Copy-on-write MERGE (upsert): `WHEN MATCHED THEN UPDATE SET *` /
@@ -1840,18 +1797,10 @@ object CommitLog {
                 keyCols: Seq[String], indexCol: Option[String] = None,
                 cdc: Boolean = false,
                 store: LogStore = LocalStore): Long = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
+    import org.apache.spark.sql.functions.{col, lit, max, min}
     require(keyCols.nonEmpty, "mergeInto needs at least one key column")
-    val version = latestVersion(table, store)
-    require(version >= 0, s"$table does not exist — append first")
-    val st = replay(table, version, store)
-    require(st.live.nonEmpty, s"nothing to merge into in $table")
-    st.mergeSchema(source.schema) // typed conflict BEFORE staging or checkpointing
-    val src = source.localCheckpoint()
-    val dup = src.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
-      .where(col("n") > 1).limit(1).count()
-    require(dup == 0L,
-      s"source has duplicate keys on (${keyCols.mkString(", ")}) — MERGE match is ambiguous")
+    val snap = open(table, store)
+    val src = mergeSource(snap, source, keyCols)
     val keys = src.select(keyCols.map(col): _*)
     // candidate files: bounds-pruned iff the table is clustered on the key
     val candidates: Seq[String] =
@@ -1859,49 +1808,22 @@ object CommitLog {
         val r = keys.agg(min(col(keyCols.head).cast("double")).as("lo"),
                          max(col(keyCols.head).cast("double")).as("hi")).head()
         if (r.isNullAt(0)) Seq.empty // all-NULL keys: nothing can match
-        else st.live.toSeq.filter { p =>
-          st.bounds.get(p).forall { case (flo, fhi) =>
-            fhi >= r.getDouble(0) && flo <= r.getDouble(1) }
-        }
-      } else st.live.toSeq
-    def reader = st.schemaStruct match {
-      case Some(s) => spark.read.schema(s)
-      case None    => spark.read
-    }
-    // input_file_name BEFORE the join — see the applyChanges comment:
-    // post-join projection loses the scan task under a shuffle join (on a
-    // DV-carrying table the metadata file-name column plays the same
-    // scan-time role, and the mask join runs before the key semi-join so
-    // a dv-deleted row can neither match nor survive as a preimage)
-    val affectedNames: Set[String] =
-      if (candidates.isEmpty) Set.empty
-      else if (st.dvs.isEmpty)
-        reader.parquet(candidates.map(f => Paths.get(table, f).toString): _*)
-          .select(keyCols.map(col) :+ input_file_name().as("__f"): _*)
-          .join(keys, keyCols, "left_semi")
-          .select("__f").distinct().collect()
-          .map(r => Paths.get(new java.net.URI(r.getString(0)).getPath)
-            .getFileName.toString).toSet
-      else
-        dvMaskKeyed(spark, table, st, dvKeyed(
-            reader.parquet(candidates.map(f => Paths.get(table, f).toString): _*)),
-            candidates)
-          .join(keys, keyCols, "left_semi")
-          .select(DvFile).distinct().collect()
-          .map(_.getString(0)).toSet
-    val affected = candidates.filter(f =>
-      affectedNames.contains(Paths.get(f).getFileName.toString))
+        else boundsKeep(snap.st, r.getDouble(0), r.getDouble(1))
+      } else snap.st.live.toSeq
+    // the mask join runs before the key semi-join, so a dv-deleted row
+    // can neither match nor survive as a preimage
+    val affected = snap.touchedFiles(spark, candidates, lit(true),
+      Some((keys, keyCols)))
     val affectedDf =
       if (affected.isEmpty) None
-      else Some(maskedRead(spark, table, st, affected))
+      else Some(snap.masked(spark, affected))
     val rewritten = affectedDf match {
       case None     => src // pure insert: no file holds a matching key
       case Some(ar) => ar.join(keys, keyCols, "left_anti")
         .unionByName(src, allowMissingColumns = true)
     }
-    val cdcOn = cdc || st.props.get("cdc").contains("true")
     val cdcActs =
-      if (!cdcOn) Nil
+      if (!snap.cdcOn(cdc)) Nil
       else {
         val matched = affectedDf.map(_.join(keys, keyCols, "left_semi"))
         val matchedKeys = matched.map(_.select(keyCols.map(col): _*))
@@ -1916,11 +1838,10 @@ object CommitLog {
         stageChanges(spark, table, changes)
       }
     val meta = Action("meta", schemaToken(rewritten.schema), 0L)
-    val adds = stage(spark, table, rewritten, indexCol,
-      checks = constraintsOf(st.props))
+    val adds = stage(spark, table, rewritten, indexCol, checks = snap.checks)
     val removes = affected.map(Action("remove", _, 0L))
     commit(table, (infoAct("merge") +: meta +: removes) ++ adds ++ cdcActs,
-      readVersion = version, store)
+      readVersion = snap.version, store)
   }
 
   /** Data files carrying NEW rows in versions `(fromVersion, toVersion]` —
@@ -1998,19 +1919,11 @@ object CommitLog {
   def readChanges(spark: SparkSession, table: String, fromVersion: Long,
                   toVersion: Option[Long] = None,
                   store: LogStore = LocalStore): (Long, Option[DataFrame]) = {
-    val to = toVersion.getOrElse(latestVersion(table, store))
-    val files = changedFiles(table, fromVersion, to, store)
-    if (files.isEmpty) (to, None)
-    else {
-      // schema as of `to`: a window may span an evolution boundary, so the
-      // union schema (missing columns = NULL) keeps the batch well-typed
-      val reader = replay(table, to, store).schemaStruct match {
-        case Some(s) => spark.read.schema(s)
-        case None    => spark.read
-      }
-      (to, Some(reader.parquet(
-        files.map(f => Paths.get(table, f).toString): _*)))
-    }
+    val snap = open(table, store, toVersion)
+    val files = changedFiles(table, fromVersion, snap.version, store)
+    // schema as of `to`: a window may span an evolution boundary, so the
+    // union schema (missing columns = NULL) keeps the batch well-typed
+    (snap.version, if (files.isEmpty) None else Some(snap.scan(spark, files)))
   }
 
   /** Full-fidelity change-data feed over `(fromVersion, toVersion]`:
@@ -2031,16 +1944,10 @@ object CommitLog {
                      toVersion: Option[Long] = None,
                      store: LogStore = LocalStore): (Long, Option[DataFrame]) = {
     import org.apache.spark.sql.functions.lit
-    val to = toVersion.getOrElse(latestVersion(table, store))
-    val base = replay(table, to, store).schemaStruct
-    val withCt = base.map(s => org.apache.spark.sql.types.StructType(
-      s.fields :+ org.apache.spark.sql.types.StructField("_change_type",
-        org.apache.spark.sql.types.StringType)))
-    def readerFor(schema: Option[org.apache.spark.sql.types.StructType]) =
-      schema match {
-        case Some(s) => spark.read.schema(s)
-        case None    => spark.read
-      }
+    val snap = open(table, store, toVersion)
+    val to = snap.version
+    val changeTypeField = org.apache.spark.sql.types.StructField("_change_type",
+      org.apache.spark.sql.types.StringType)
     val parts = ((fromVersion + 1) to to).flatMap { v =>
       val acts = decode(store.read(versionFile(table, v)))
       val cdcFiles = acts.collect { case a if a.op == "cdc" => a.path }
@@ -2050,12 +1957,10 @@ object CommitLog {
       val dvRems = acts.collect { case a if a.op == "dvremove" => a.path }
       val op = operationOf(acts)
       def readAs(files: Seq[String], changeType: String): DataFrame =
-        readerFor(base).parquet(files.map(f => Paths.get(table, f).toString): _*)
-          .withColumn("_change_type", lit(changeType))
+        snap.scan(spark, files).withColumn("_change_type", lit(changeType))
       val frame: Option[DataFrame] =
         if (cdcFiles.nonEmpty)
-          Some(readerFor(withCt).parquet(
-            cdcFiles.map(f => Paths.get(table, f).toString): _*))
+          Some(snap.scan(spark, cdcFiles, Seq(changeTypeField)))
         else if (removes.isEmpty && dvAdds.isEmpty && dvRems.isEmpty) {
           // adds-only commits are pure inserts WHATEVER their operation:
           // a merge/apply that matched nothing destructive (no removes,
@@ -2088,8 +1993,7 @@ object CommitLog {
                        changeType: String): Option[DataFrame] =
             if (files.isEmpty) None
             else {
-              val keyed = dvKeyed(readerFor(base).parquet(
-                files.map(f => Paths.get(table, f).toString): _*))
+              val keyed = dvKeyed(snap.scan(spark, files))
               val m = positions.select(col("file").as("__graft_dv_mfile"),
                                        col("pos").as("__graft_dv_mpos"))
               Some(keyed.join(broadcast(m),
@@ -2108,7 +2012,7 @@ object CommitLog {
           // F's rows unmasked would resurrect deleted rows downstream.
           // One checkpoint-seeded replay per restore commit; restores are
           // rare and the replay is O(commits), never data-sized.
-          lazy val stateAtV = replay(table, v, store)
+          lazy val stateAtV = snap.at(v).st
           val ins1 =
             if (adds.isEmpty) None
             else {
@@ -2160,6 +2064,48 @@ object CommitLog {
     else (to, Some(parts.reduce(_.unionByName(_, allowMissingColumns = true))))
   }
 
+  /** The prelude and commit both apply forms share. Validates the txn
+    * token, skips an already-applied `(appId, batchId)` BEFORE any batch
+    * computation (a replayed batch costs one log replay, zero Spark
+    * jobs), reduces the batch to the LAST relevant change per key (pinned
+    * — every consumer below must see the same rows), bootstraps an empty
+    * replica from the upserts, and otherwise commits the actions
+    * `rewrite` plans from the snapshot, the upsert rows and the touched
+    * keys. A racer that already applied the same txn is a skip (-1). */
+  private def applyBatch(spark: SparkSession, replica: String, changes: DataFrame,
+                         keyCols: Seq[String], txn: Option[(String, Long)],
+                         store: LogStore, op: String)
+                        (rewrite: (TableAt, DataFrame, DataFrame) => Seq[Action]): Long = {
+    import org.apache.spark.sql.functions.{col, row_number}
+    require(keyCols.nonEmpty, "applying changes needs key columns")
+    txn.foreach { case (app, b) =>
+      require(app.matches("[A-Za-z0-9_.-]+"), s"appId must be a plain token: $app")
+      require(b >= 0, s"batchId must be non-negative: $b")
+    }
+    val snap = open(replica, store)
+    txn.foreach { case (app, b) =>
+      if (snap.st.txns.getOrElse(app, -1L) >= b) return -1L
+    }
+    val relevant = changes.where(col("_change_type")
+      .isin("insert", "update_postimage", "delete"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keyCols.map(col): _*)
+      .orderBy(col("_commit_version").desc, col("_change_type").desc)
+    val last = relevant.withColumn("__rn", row_number().over(w))
+      .where(col("__rn") === 1).drop("__rn").localCheckpoint()
+    if (last.isEmpty) return -1L
+    val upserts = last.where(col("_change_type") =!= "delete")
+      .drop("_change_type", "_commit_version")
+    val acts =
+      if (snap.version >= 0) rewrite(snap, upserts, last.select(keyCols.map(col): _*))
+      // first batch bootstraps; all-deletes against nothing is a no-op
+      else if (upserts.isEmpty) return -1L
+      else Action("meta", schemaToken(upserts.schema), 0L) +: stage(spark, replica, upserts)
+    val txnActs = txn.map { case (app, b) => Action("txn", app, b) }.toSeq
+    try commit(replica, (infoAct(op) +: acts) ++ txnActs, readVersion = snap.version, store)
+    catch { case _: TxnAlreadyApplied => -1L }
+  }
+
   /** Apply a [[readChangesCdc]] batch to a REPLICA table — the consumer
     * half of CDC, proving the feed is sufficient to maintain a row-level
     * copy (retractions included). One copy-on-write rewrite handles both
@@ -2182,74 +2128,21 @@ object CommitLog {
   def applyChanges(spark: SparkSession, replica: String, changes: DataFrame,
                    keyCols: Seq[String],
                    txn: Option[(String, Long)] = None,
-                   store: LogStore = LocalStore): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name, row_number}
-    require(keyCols.nonEmpty, "applyChanges needs key columns")
-    txn.foreach { case (app, b) =>
-      require(app.matches("[A-Za-z0-9_.-]+"), s"appId must be a plain token: $app")
-      require(b >= 0, s"batchId must be non-negative: $b")
+                   store: LogStore = LocalStore): Long =
+    applyBatch(spark, replica, changes, keyCols, txn, store, "apply") {
+        (snap, upserts, keys) =>
+      // copy-on-write: rewrite the files holding a touched key
+      val affected = snap.touchedFiles(spark, snap.st.live.toSeq,
+        org.apache.spark.sql.functions.lit(true), Some((keys, keyCols)))
+      val rewritten =
+        if (affected.isEmpty) upserts
+        else snap.masked(spark, affected)
+          .join(keys, keyCols, "left_anti")
+          .unionByName(upserts, allowMissingColumns = true)
+      val meta = Action("meta", schemaToken(rewritten.schema), 0L)
+      val adds = stage(spark, replica, rewritten, checks = snap.checks)
+      (meta +: affected.map(Action("remove", _, 0L))) ++ adds
     }
-    val version = latestVersion(replica, store)
-    val stOpt = if (version < 0) None else Some(replay(replica, version, store))
-    // the high-water skip runs BEFORE any batch computation: a replayed
-    // batch costs one log replay, zero Spark jobs
-    txn.foreach { case (app, b) =>
-      stOpt.foreach { st =>
-        if (st.txns.getOrElse(app, -1L) >= b) return -1L
-      }
-    }
-    val txnActs = txn.map { case (app, b) => Action("txn", app, b) }.toSeq
-    val relevant = changes.where(col("_change_type")
-      .isin("insert", "update_postimage", "delete"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy(col("_commit_version").desc, col("_change_type").desc)
-    val last = relevant.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn").localCheckpoint()
-    if (last.isEmpty) return -1L
-    val upserts = last.where(col("_change_type") =!= "delete")
-      .drop("_change_type", "_commit_version")
-    val keys = last.select(keyCols.map(col): _*)
-    if (version < 0) {
-      // first batch bootstraps; all-deletes against nothing is a no-op
-      if (upserts.isEmpty) return -1L
-      val meta = Action("meta", schemaToken(upserts.schema), 0L)
-      val acts = (infoAct("apply") +: meta +: stage(spark, replica, upserts)) ++ txnActs
-      return (try commit(replica, acts, readVersion = -1L, store)
-              catch { case _: TxnAlreadyApplied => -1L })
-    }
-    val st = stOpt.get
-    def reader = st.schemaStruct match {
-      case Some(s) => spark.read.schema(s)
-      case None    => spark.read
-    }
-    val files = st.live.toSeq
-    // input_file_name is captured BEFORE the join: projected after it,
-    // the expression silently returns "" whenever the planner picks a
-    // shuffle join (the row leaves its scan task), and no file matches
-    val affectedNames: Set[String] =
-      if (files.isEmpty) Set.empty
-      else reader.parquet(files.map(f => Paths.get(replica, f).toString): _*)
-        .select(keyCols.map(col) :+ input_file_name().as("__f"): _*)
-        .join(keys, keyCols, "left_semi")
-        .select("__f").distinct().collect()
-        .map(r => Paths.get(new java.net.URI(r.getString(0)).getPath)
-          .getFileName.toString).toSet
-    val affected = files.filter(f =>
-      affectedNames.contains(Paths.get(f).getFileName.toString))
-    val rewritten =
-      if (affected.isEmpty) upserts
-      else reader.parquet(affected.map(f => Paths.get(replica, f).toString): _*)
-        .join(keys, keyCols, "left_anti")
-        .unionByName(upserts, allowMissingColumns = true)
-    val meta = Action("meta", schemaToken(rewritten.schema), 0L)
-    val adds = stage(spark, replica, rewritten,
-      checks = constraintsOf(st.props))
-    val removes = affected.map(Action("remove", _, 0L))
-    try commit(replica, (infoAct("apply") +: meta +: removes) ++ adds ++ txnActs,
-      readVersion = version, store)
-    catch { case _: TxnAlreadyApplied => -1L }
-  }
 
   /** [[applyChanges]] at merge-on-read cost: every touched key's current
     * row is MASKED by one (file, position) sidecar and the surviving
@@ -2266,70 +2159,20 @@ object CommitLog {
   def applyChangesDv(spark: SparkSession, replica: String, changes: DataFrame,
                      keyCols: Seq[String],
                      txn: Option[(String, Long)] = None,
-                     store: LogStore = LocalStore): Long = {
-    import org.apache.spark.sql.functions.{col, row_number}
-    require(keyCols.nonEmpty, "applyChangesDv needs key columns")
-    txn.foreach { case (app, b) =>
-      require(app.matches("[A-Za-z0-9_.-]+"), s"appId must be a plain token: $app")
-      require(b >= 0, s"batchId must be non-negative: $b")
-    }
-    val version = latestVersion(replica, store)
-    val stOpt = if (version < 0) None else Some(replay(replica, version, store))
-    txn.foreach { case (app, b) =>
-      stOpt.foreach { st =>
-        if (st.txns.getOrElse(app, -1L) >= b) return -1L
-      }
-    }
-    val txnActs = txn.map { case (app, b) => Action("txn", app, b) }.toSeq
-    val relevant = changes.where(col("_change_type")
-      .isin("insert", "update_postimage", "delete"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy(col("_commit_version").desc, col("_change_type").desc)
-    val last = relevant.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn").localCheckpoint()
-    if (last.isEmpty) return -1L
-    val upserts = last.where(col("_change_type") =!= "delete")
-      .drop("_change_type", "_commit_version")
-    val keys = last.select(keyCols.map(col): _*)
-    if (version < 0) {
-      if (upserts.isEmpty) return -1L
+                     store: LogStore = LocalStore): Long =
+    applyBatch(spark, replica, changes, keyCols, txn, store, "applydv") {
+        (snap, upserts, keys) =>
+      // current rows of every touched key, with positions, through the
+      // replica's existing mask — these are exactly the rows to retire
+      val dvActs =
+        if (snap.st.live.isEmpty) Nil
+        else snap.dvActions(spark, snap.keyed(spark, snap.st.live.toSeq)
+          .join(keys, keyCols, "left_semi")
+          .localCheckpoint())
       val meta = Action("meta", schemaToken(upserts.schema), 0L)
-      val acts = (infoAct("applydv") +: meta +: stage(spark, replica, upserts)) ++ txnActs
-      return (try commit(replica, acts, readVersion = -1L, store)
-              catch { case _: TxnAlreadyApplied => -1L })
+      val adds = stage(spark, replica, upserts, checks = snap.checks)
+      (meta +: dvActs) ++ adds
     }
-    val st = stOpt.get
-    def reader = st.schemaStruct match {
-      case Some(s) => spark.read.schema(s)
-      case None    => spark.read
-    }
-    val paths = st.live.toSeq.map(f => Paths.get(replica, f).toString)
-    // current rows of every touched key, with positions, through the
-    // replica's existing mask — these are exactly the rows to retire
-    val hits =
-      if (paths.isEmpty) None
-      else Some(dvMaskKeyed(spark, replica, st, dvKeyed(reader.parquet(paths: _*)), st.live.toSeq)
-        .join(keys, keyCols, "left_semi")
-        .localCheckpoint())
-    val perFile = hits.map(_.groupBy(DvFile).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1))).getOrElse(Array.empty)
-    val dvActs =
-      if (perFile.isEmpty) Nil
-      else stage(spark, replica,
-          hits.get.select(col(DvFile).as("file"), col(DvPos).as("pos"))
-            .repartition(1))
-        .map(_.copy(op = "dv"))
-    val dvRefActs = perFile.sortBy(_._1).map { case (name, n) =>
-      Action("dvref", s"data/$name", n)
-    }.toSeq
-    val meta = Action("meta", schemaToken(upserts.schema), 0L)
-    val adds = stage(spark, replica, upserts, checks = constraintsOf(st.props))
-    try commit(replica,
-      (infoAct("applydv") +: meta +: (dvActs ++ dvRefActs)) ++ adds ++ txnActs,
-      readVersion = version, store)
-    catch { case _: TxnAlreadyApplied => -1L }
-  }
 
   /** OCC compaction: rewrite the current live set into ~`targetFiles`
     * files and commit remove(old)+add(new). Concurrent APPENDS commute
@@ -2337,20 +2180,26 @@ object CommitLog {
     * a concurrent rewrite of the same files raises
     * [[ConcurrentRewriteException]] on exactly one of the racers. */
   def compact(spark: SparkSession, table: String, targetFiles: Int,
-              store: LogStore = LocalStore): Long = {
-    val version = latestVersion(table, store)
-    val st = replay(table, version, store)
-    require(st.live.nonEmpty, s"nothing to compact in $table")
-    // masked read: compaction MATERIALIZES live deletion vectors (the
-    // rewritten files no longer contain the masked rows) and retires every
-    // sidecar — the maintenance pass that keeps merge-on-read reads cheap
-    val df = maskedRead(spark, table, st, st.live.toSeq)
-      .repartition(math.max(1, targetFiles))
-    val adds = stage(spark, table, df)
-    val removes = st.live.toSeq.map(Action("remove", _, 0L)) ++
-      st.dvs.toSeq.map(p => Action("dvremove", p, st.dvRowsOf.getOrElse(p, 0L)))
-    commit(table, infoAct("compact") +: (removes ++ adds),
-      readVersion = version, store)
+              store: LogStore = LocalStore): Long =
+    compactAt(spark, open(table, store), targetFiles, Nil)
+
+  /** Rewrite the live set at `snap` into ~`targetFiles` files — z-ordered
+    * on `clusterCols` with a re-recorded zonemap when given — and commit
+    * remove(every live file and sidecar)+add(new). The read is masked:
+    * compaction MATERIALIZES live deletion vectors (the rewritten files
+    * no longer contain the masked rows) and retires every sidecar — the
+    * maintenance pass that keeps merge-on-read reads cheap. */
+  private def compactAt(spark: SparkSession, snap: TableAt, targetFiles: Int,
+                        clusterCols: Seq[String]): Long = {
+    require(snap.st.live.nonEmpty, s"nothing to compact in ${snap.table}")
+    val df = snap.masked(spark, snap.st.live.toSeq)
+    val adds =
+      if (clusterCols.isEmpty)
+        stage(spark, snap.table, df.repartition(math.max(1, targetFiles)))
+      else stage(spark, snap.table, zcluster(df, clusterCols, targetFiles),
+        None, clusterCols)
+    commit(snap.table, infoAct("compact") +: (snap.retireAll ++ adds),
+      readVersion = snap.version, snap.store)
   }
 
   /** Policy-driven maintenance — the operator loop in one idempotent
@@ -2370,14 +2219,12 @@ object CommitLog {
                maxFiles: Int = 64, maxMaskRows: Long = 1000000L,
                targetFiles: Int = 8, clusterCols: Seq[String] = Nil,
                store: LogStore = LocalStore): Long = {
-    val tip = latestVersion(table, store)
-    require(tip >= 0, s"$table has no commits to maintain")
-    val st = replay(table, tip, store)
+    val snap = open(table, store)
+    require(snap.version >= 0, s"$table has no commits to maintain")
+    val st = snap.st
     val maskRows = st.dvs.toSeq.map(st.dvRowsOf.getOrElse(_, 0L)).sum
     if (st.live.size <= maxFiles && maskRows <= maxMaskRows) return -1L
-    if (clusterCols.nonEmpty)
-      compactClustered(spark, table, clusterCols, targetFiles, store)
-    else compact(spark, table, targetFiles, store)
+    compactAt(spark, snap, targetFiles, clusterCols)
   }
 
   /** OPTIMIZE-ZORDER maintenance: compaction that RE-CLUSTERS — rewrite
@@ -2391,17 +2238,7 @@ object CommitLog {
                        clusterCols: Seq[String], targetFiles: Int,
                        store: LogStore = LocalStore): Long = {
     require(clusterCols.nonEmpty, "compactClustered needs cluster columns")
-    val version = latestVersion(table, store)
-    val st = replay(table, version, store)
-    require(st.live.nonEmpty, s"nothing to compact in $table")
-    // same DV materialization contract as [[compact]]
-    val df = maskedRead(spark, table, st, st.live.toSeq)
-    val adds = stage(spark, table,
-      zcluster(df, clusterCols, targetFiles), None, clusterCols)
-    val removes = st.live.toSeq.map(Action("remove", _, 0L)) ++
-      st.dvs.toSeq.map(p => Action("dvremove", p, st.dvRowsOf.getOrElse(p, 0L)))
-    commit(table, infoAct("compact") +: (removes ++ adds),
-      readVersion = version, store)
+    compactAt(spark, open(table, store), targetFiles, clusterCols)
   }
 
   /** RESTORE TABLE ... TO VERSION: roll the table's DATA back to what it
@@ -2449,12 +2286,12 @@ object CommitLog {
 
   private def restoreImpl(spark: Option[SparkSession], table: String,
                           asOf: Long, store: LogStore): Long = {
-    val version = latestVersion(table, store)
+    val snap = open(table, store)
+    val version = snap.version
     require(version >= 0, s"$table has no commits to restore")
     require(asOf >= 0 && asOf <= version,
       s"version $asOf does not exist (tip is $version)")
-    val target = replay(table, asOf, store)
-    val current = replay(table, version, store)
+    val (current, target) = (snap.st, snap.at(asOf).st)
     val toRemove = current.live.toSeq.filterNot(target.live.contains)
     val toAdd = target.live.toSeq.filterNot(current.live.contains)
     // deletion-vector state restores with the data: set equality is state
@@ -2480,24 +2317,20 @@ object CommitLog {
           s"restoring $table across a deletion-vector state change — " +
             "use restore(spark, table, asOf) so the target mask can be " +
             "consolidated into a fresh sidecar"))
-        val retire = current.dvs.toSeq.map(p => Action("dvremove", p, current.dvRowsOf.getOrElse(p, 0L)))
-        if (target.dvs.isEmpty) retire
+        import org.apache.spark.sql.functions.col
+        if (target.dvs.isEmpty) snap.retireSidecars
         else {
-          val mask = s.read.parquet(
-            target.dvs.toSeq.map(f => Paths.get(table, f).toString): _*)
-            .localCheckpoint() // pinned: the sidecar and the refs must agree
-          val consolidated = stage(s, table, mask.repartition(1))
-            .map(_.copy(op = "dv"))
           // dvref per masked file: a racing rewrite of a file the restored
           // mask covers must hit the typed conflict (its rows would
           // otherwise be materialized back under our feet)
-          val refs = mask.groupBy("file").count().collect()
-            .map(r => Action("dvref", s"data/${r.getString(0)}", r.getLong(1)))
-            .sortBy(_.path).toSeq
-          retire ++ consolidated ++ refs
+          val mask = s.read.parquet(
+            target.dvs.toSeq.map(f => Paths.get(table, f).toString): _*)
+            .select(col("file").as(DvFile), col("pos").as(DvPos))
+            .localCheckpoint() // pinned: the sidecar and the refs must agree
+          snap.retireSidecars ++ snap.dvActions(s, mask)
         }
       }
-    val checks = constraintsOf(current.props)
+    val checks = snap.checks
     if (checks.nonEmpty && toAdd.nonEmpty) {
       val s = spark.getOrElse(throw new IllegalStateException(
         s"$table has active CHECK constraints (${checks.keys.mkString(", ")}) — " +
@@ -2506,15 +2339,10 @@ object CommitLog {
       // current (tip) schema: a constraint may reference a column added
       // after asOf, which the re-added files read as NULL — and NULL
       // violates under the house CHECK rule, same as addConstraint
-      val reader = current.schemaStruct match {
-        case Some(sc) => s.read.schema(sc)
-        case None     => s.read
-      }
+      val readded = snap.scan(s, toAdd)
       // validate the rows a reader will actually SEE: re-added files are
       // masked by the target's dv state (a dv-deleted violating row is
       // not a row, so it must not block the restore)
-      val readded = reader.parquet(
-        toAdd.map(f => Paths.get(table, f).toString): _*)
       val validated =
         if (target.dvs.isEmpty) readded
         else dvMaskKeyed(s, table, target, dvKeyed(readded), toAdd).drop(DvFile, DvPos)
@@ -2640,10 +2468,11 @@ object CommitLog {
     * early specs pin: only the tip survives. Returns deleted file names. */
   def vacuum(table: String, retainVersions: Int = 0, minAgeMs: Long = 0L,
              store: LogStore = LocalStore): Seq[String] = {
-    val tip = latestVersion(table, store)
+    val log = open(table, store)
+    val tip = log.tip
     if (tip < 0) return Nil // no commits: every data file may be an in-flight stage
     val floor = math.max(0L, tip - retainVersions.toLong)
-    val floorState = replay(table, floor, store)
+    val floorState = log.at(floor).st
     val kept = mutable.Set.empty[String] ++ floorState.live ++ floorState.dvs
     ((floor + 1) to tip).foreach { v =>
       decode(store.read(versionFile(table, v))).foreach {
@@ -2663,6 +2492,16 @@ object CommitLog {
   }
 
   // --- oracle-checked query forms (SparkEntry registry) ---------------------
+
+  /** `body` over the (o_orderkey, o_orderstatus, o_totalprice) orders
+    * projection, persisted for this call only — the fixtures that use it
+    * read it several times — and released even when `body` throws. */
+  private def withOrders[T](spark: SparkSession, dir: String)(body: DataFrame => T): T = {
+    val o = Tables.orders(spark, dir)
+      .select("o_orderkey", "o_orderstatus", "o_totalprice")
+      .persist()
+    try body(o) finally { o.unpersist(); () }
+  }
 
   /** Two concurrent appends of the nation projection through the full OCC
     * protocol (real threads, real race on v0/v1), then a tip snapshot
@@ -2803,18 +2642,16 @@ object CommitLog {
     val table = Files.createTempDirectory("occ_merge").toString
     // persisted within this invocation only: the seed and both CDC arms
     // read the same projection (see occConstraints)
-    val o = Tables.orders(spark, dir)
-      .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      .persist()
-    appendIndexed(spark, table, o.repartitionByRange(8, col("o_orderkey")),
-      "o_orderkey")
-    val updates = o.where(col("o_orderkey").between(1000, 3000))
-      .withColumn("o_totalprice", col("o_totalprice") * 2)
-    val inserts = o.where(col("o_orderkey").between(1, 100))
-      .withColumn("o_orderkey", -col("o_orderkey"))
-    mergeInto(spark, table, updates.unionByName(inserts),
-      Seq("o_orderkey"), Some("o_orderkey"))
-    o.unpersist()
+    withOrders(spark, dir) { o =>
+      appendIndexed(spark, table, o.repartitionByRange(8, col("o_orderkey")),
+        "o_orderkey")
+      val updates = o.where(col("o_orderkey").between(1000, 3000))
+        .withColumn("o_totalprice", col("o_totalprice") * 2)
+      val inserts = o.where(col("o_orderkey").between(1, 100))
+        .withColumn("o_orderkey", -col("o_orderkey"))
+      mergeInto(spark, table, updates.unionByName(inserts),
+        Seq("o_orderkey"), Some("o_orderkey"))
+    }
     read(spark, table).orderBy("o_orderkey")
   }
 
@@ -2840,17 +2677,15 @@ object CommitLog {
     import org.apache.spark.sql.functions.col
     val table = Files.createTempDirectory("occ_mergedv").toString
     // persisted within this invocation only (see occMergeUpsert)
-    val o = Tables.orders(spark, dir)
-      .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      .persist()
-    appendIndexed(spark, table, o.repartitionByRange(8, col("o_orderkey")),
-      "o_orderkey")
-    val updates = o.where(col("o_orderkey").between(1000, 3000))
-      .withColumn("o_totalprice", col("o_totalprice") * 2)
-    val inserts = o.where(col("o_orderkey").between(1, 100))
-      .withColumn("o_orderkey", -col("o_orderkey"))
-    mergeIntoDv(spark, table, updates.unionByName(inserts), Seq("o_orderkey"))
-    o.unpersist()
+    withOrders(spark, dir) { o =>
+      appendIndexed(spark, table, o.repartitionByRange(8, col("o_orderkey")),
+        "o_orderkey")
+      val updates = o.where(col("o_orderkey").between(1000, 3000))
+        .withColumn("o_totalprice", col("o_totalprice") * 2)
+      val inserts = o.where(col("o_orderkey").between(1, 100))
+        .withColumn("o_orderkey", -col("o_orderkey"))
+      mergeIntoDv(spark, table, updates.unionByName(inserts), Seq("o_orderkey"))
+    }
     read(spark, table).orderBy("o_orderkey")
   }
 
@@ -3090,23 +2925,21 @@ object CommitLog {
     // persisted within this invocation only (the occ_maintain pattern):
     // the seed append, the violating batch and the compliant batch all
     // filter the same projection — one scan instead of three
-    val o = Tables.orders(spark, dir)
-      .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      .persist()
-    append(spark, table, o)
-    addConstraint(spark, table, "positive_price", "o_totalprice > 0")
-    val violating = o.where(col("o_orderkey") <= 200)
-      .withColumn("o_totalprice", -col("o_totalprice"))
-    val rejected =
-      try { append(spark, table, violating); false }
-      catch { case _: ConstraintViolationException => true }
-    // on a zero-row fixture there is nothing to violate — the batch
-    // legitimately lands empty; on any populated fixture it MUST reject
-    require(rejected || violating.isEmpty,
-      "a non-empty violating batch must be rejected")
-    append(spark, table, o.where(col("o_orderkey") <= 100)
-      .withColumn("o_totalprice", col("o_totalprice") * 2))
-    o.unpersist()
+    withOrders(spark, dir) { o =>
+      append(spark, table, o)
+      addConstraint(spark, table, "positive_price", "o_totalprice > 0")
+      val violating = o.where(col("o_orderkey") <= 200)
+        .withColumn("o_totalprice", -col("o_totalprice"))
+      val rejected =
+        try { append(spark, table, violating); false }
+        catch { case _: ConstraintViolationException => true }
+      // on a zero-row fixture there is nothing to violate — the batch
+      // legitimately lands empty; on any populated fixture it MUST reject
+      require(rejected || violating.isEmpty,
+        "a non-empty violating batch must be rejected")
+      append(spark, table, o.where(col("o_orderkey") <= 100)
+        .withColumn("o_totalprice", col("o_totalprice") * 2))
+    }
     read(spark, table).orderBy("o_orderkey", "o_totalprice")
   }
 
@@ -3258,13 +3091,11 @@ object CommitLog {
     // re-scans the source parquet (8 scans for 1 table's bytes — guide
     // §1.2 step 1, don't re-read what you already hold). Released before
     // returning, so nothing outlives the call.
-    val o = Tables.orders(spark, dir)
-      .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      .persist()
-    (0 until 8).foreach { i =>
-      append(spark, table, o.where(pmod8(col("o_orderkey")) === i).coalesce(1))
+    withOrders(spark, dir) { o =>
+      (0 until 8).foreach { i =>
+        append(spark, table, o.where(pmod8(col("o_orderkey")) === i).coalesce(1))
+      }
     }
-    o.unpersist()
     deleteWhereDv(spark, table, col("o_orderkey").between(1000, 3000))
     val v = maintain(spark, table, maxFiles = 4, maxMaskRows = 0L, targetFiles = 2)
     require(v >= 0, "the over-threshold tick must compact")
@@ -3327,19 +3158,17 @@ object CommitLog {
     val table = Files.createTempDirectory("occ_sqlw").toString
     // persisted within this invocation only: three writes read the same
     // projection (see occConstraints)
-    val o = Tables.orders(spark, dir)
-      .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      .persist()
-    def writer(df: DataFrame) = df.write.format("graft-commitlog")
-      .option("table", table).option("indexCol", "o_orderkey")
-    writer(o.repartitionByRange(8, col("o_orderkey")))
-      .mode(org.apache.spark.sql.SaveMode.ErrorIfExists).save()
-    writer(o.where(col("o_orderkey") <= 100))
-      .mode(org.apache.spark.sql.SaveMode.Append).save()
-    writer(o.withColumn("o_totalprice", col("o_totalprice") * 2)
-        .repartitionByRange(8, col("o_orderkey")))
-      .mode(org.apache.spark.sql.SaveMode.Overwrite).save()
-    o.unpersist()
+    withOrders(spark, dir) { o =>
+      def writer(df: DataFrame) = df.write.format("graft-commitlog")
+        .option("table", table).option("indexCol", "o_orderkey")
+      writer(o.repartitionByRange(8, col("o_orderkey")))
+        .mode(org.apache.spark.sql.SaveMode.ErrorIfExists).save()
+      writer(o.where(col("o_orderkey") <= 100))
+        .mode(org.apache.spark.sql.SaveMode.Append).save()
+      writer(o.withColumn("o_totalprice", col("o_totalprice") * 2)
+          .repartitionByRange(8, col("o_orderkey")))
+        .mode(org.apache.spark.sql.SaveMode.Overwrite).save()
+    }
     read(spark, table).orderBy("o_orderkey")
   }
 
@@ -3366,26 +3195,24 @@ object CommitLog {
     // persisted within this invocation only: the create write and both
     // SQL INSERT...SELECTs over the temp view read the same projection
     // (see occConstraints)
-    val o = Tables.orders(spark, dir)
-      .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      .persist()
-    o.write.format("graft-commitlog").option("table", table)
-      .option("indexCol", "o_orderkey")
-      .mode(org.apache.spark.sql.SaveMode.ErrorIfExists).save()
-    o.createOrReplaceTempView("occ_sqli_src")
-    spark.sql("DROP TABLE IF EXISTS occ_sqli")
-    spark.sql(
-      s"""CREATE TABLE occ_sqli USING `graft-commitlog`
-         |OPTIONS (table '$table', indexCol 'o_orderkey')""".stripMargin)
-    spark.sql(
-      """INSERT OVERWRITE occ_sqli
-        |SELECT o_orderkey, o_orderstatus, o_totalprice * 2
-        |FROM occ_sqli_src WHERE o_orderkey % 2 = 0""".stripMargin)
-    spark.sql(
-      """INSERT INTO occ_sqli
-        |SELECT o_orderkey, o_orderstatus, o_totalprice
-        |FROM occ_sqli_src WHERE o_orderkey % 2 = 1""".stripMargin)
-    o.unpersist()
+    withOrders(spark, dir) { o =>
+      o.write.format("graft-commitlog").option("table", table)
+        .option("indexCol", "o_orderkey")
+        .mode(org.apache.spark.sql.SaveMode.ErrorIfExists).save()
+      o.createOrReplaceTempView("occ_sqli_src")
+      spark.sql("DROP TABLE IF EXISTS occ_sqli")
+      spark.sql(
+        s"""CREATE TABLE occ_sqli USING `graft-commitlog`
+           |OPTIONS (table '$table', indexCol 'o_orderkey')""".stripMargin)
+      spark.sql(
+        """INSERT OVERWRITE occ_sqli
+          |SELECT o_orderkey, o_orderstatus, o_totalprice * 2
+          |FROM occ_sqli_src WHERE o_orderkey % 2 = 0""".stripMargin)
+      spark.sql(
+        """INSERT INTO occ_sqli
+          |SELECT o_orderkey, o_orderstatus, o_totalprice
+          |FROM occ_sqli_src WHERE o_orderkey % 2 = 1""".stripMargin)
+    }
     spark.sql("SELECT o_orderkey, o_orderstatus, o_totalprice FROM occ_sqli ORDER BY o_orderkey")
   }
 

@@ -50,12 +50,20 @@ import java.nio.file.Paths
   * time (a DSv1 relation is resolved once per `load`), so a registered
   * view is a consistent snapshot — re-`load()` to see later commits, the
   * same re-resolution rule every snapshot-isolated reader has. */
-class CommitLogRelation(override val sqlContext: SQLContext,
-                        table: String, indexCol: Option[String],
-                        pinnedVersion: Long,
-                        store: CommitLog.LogStore,
-                        asOfPinned: Boolean = false)
+class CommitLogRelation private[sources] (override val sqlContext: SQLContext,
+                                          indexCol: Option[String],
+                                          snap: CommitLog.TableAt,
+                                          asOfPinned: Boolean)
   extends BaseRelation with PrunedFilteredScan with InsertableRelation {
+
+  def this(sqlContext: SQLContext, table: String, indexCol: Option[String],
+           pinnedVersion: Long, store: CommitLog.LogStore,
+           asOfPinned: Boolean = false) =
+    this(sqlContext, indexCol, CommitLog.open(table, store, Some(pinnedVersion)),
+      asOfPinned)
+
+  private val table = snap.table
+  private val store = snap.store
 
   /** The commit-log directory this relation reads/writes — the identity
     * [[insert]]'s targeted cache invalidation matches on (a path-based
@@ -66,7 +74,7 @@ class CommitLogRelation(override val sqlContext: SQLContext,
   private val spark = sqlContext.sparkSession
   // the pinned snapshot's full state: file list, bounds/zonemaps/blooms,
   // live deletion vectors, log-carried schema — one replay at load time
-  private val st = CommitLog.replay(table, pinnedVersion, store)
+  private val st = snap.st
 
   override val schema: StructType = st.schemaStruct.getOrElse {
     // legacy log without meta actions: fall back to footer merging
@@ -87,7 +95,7 @@ class CommitLogRelation(override val sqlContext: SQLContext,
     val base =
       if (files.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else CommitLog.maskedRead(spark, table, st, files)
+      else snap.masked(spark, files)
     // re-apply the translatable conjuncts HERE too, under the scan's own
     // plan, so parquet row-group/page pushdown sees them (Spark re-applies
     // all of them above the relation as well — belt and braces by design)
@@ -126,7 +134,7 @@ class CommitLogRelation(override val sqlContext: SQLContext,
     // would land at the TIP while every read through the same name keeps
     // showing the past — refuse loudly instead of "succeeding" invisibly
     require(!asOfPinned,
-      s"$table was resolved with versionAsOf/timestampAsOf (v$pinnedVersion) — " +
+      s"$table was resolved with versionAsOf/timestampAsOf (v${snap.version}) — " +
         "INSERT targets the live table; resolve it without AS OF to write")
     if (overwrite) CommitLog.overwrite(spark, table, data, indexCol, store = store)
     else indexCol match {
@@ -222,10 +230,10 @@ object CommitLogRelation {
   def filesForFilters(table: String, indexCol: Option[String],
                       filters: Seq[Filter], asOf: Option[Long] = None,
                       store: CommitLog.LogStore = CommitLog.LocalStore): Seq[String] = {
-    val tip = CommitLog.latestVersion(table, store)
-    val v = asOf.getOrElse(tip)
-    require(v >= 0 && v <= tip, s"version $v does not exist (tip is $tip)")
-    pruneFiles(CommitLog.replay(table, v, store), indexCol, filters)
+    val snap = CommitLog.open(table, store, asOf)
+    require(snap.version >= 0,
+      s"version ${snap.version} does not exist (tip is ${snap.tip})")
+    pruneFiles(snap.st, indexCol, filters)
   }
 
   /** The translatable conjuncts, as Columns (for parquet-level pushdown
@@ -299,7 +307,8 @@ class CommitLogProvider
                               parameters: Map[String, String]): BaseRelation = {
     val table = tableOf(parameters)
     val store = CommitLogProvider.storeFor(parameters)
-    val tip = CommitLog.latestVersion(table, store)
+    val log = CommitLog.open(table, store)
+    val tip = log.tip
     require(tip >= 0, s"$table has no commits — append before reading it")
     val byVersion = parameters.get("versionAsOf").map(_.toLong)
     val byTs = parameters.get("timestampAsOf").map { raw =>
@@ -311,8 +320,8 @@ class CommitLogProvider
       "pass versionAsOf OR timestampAsOf, not both")
     val v = byVersion.orElse(byTs).getOrElse(tip)
     require(v >= 0 && v <= tip, s"version $v does not exist (tip is $tip)")
-    new CommitLogRelation(sqlContext, table, parameters.get("indexCol"),
-      v, store, asOfPinned = byVersion.nonEmpty || byTs.nonEmpty)
+    new CommitLogRelation(sqlContext, parameters.get("indexCol"), log.at(v),
+      asOfPinned = byVersion.nonEmpty || byTs.nonEmpty)
   }
 
   override def createRelation(sqlContext: SQLContext,

@@ -117,40 +117,9 @@ object Ingest {
     }
   }
 
-  /** MIGRATION SHIM — the plain-parquet streaming ingest this engine
-    * shipped before the capture fact table moved onto the commit log.
-    * New deployments use [[streamCapturesLog]]: same 10 s micro-batch
-    * file source and no-reprocess guarantee, plus the ACID layer's whole
-    * contract (txn-marker exactly-once, concurrent compaction under OCC,
-    * per-file session bounds, time travel/CDC/constraints/restore). This
-    * form is kept ONLY so an existing plain-parquet deployment can keep
-    * its checkpoint running while it migrates (drain the stream, copy
-    * the directory's rows through `CommitLog.append`, restart on the log
-    * form with a fresh checkpoint — the appId txn ledger makes a replay
-    * of the cutover batch a no-op). No engine code path calls it; the
-    * restart/no-reprocess coverage lives on the log form
-    * (StreamingSpec T2, CaptureLogSpec). */
-  @deprecated("capture ingest lives on the commit log — use streamCapturesLog " +
-    "(see the migration note in the scaladoc)", "r17")
-  def streamCaptures(spark: SparkSession, inputDir: String, tableDir: String,
-                     checkpointDir: String,
-                     trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    spark.readStream
-      .schema(captureSchema)
-      .json(inputDir)
-      .writeStream
-      .format("parquet")
-      .option("path", tableDir)
-      .option("checkpointLocation", checkpointDir)
-      .partitionBy("session_id")
-      .trigger(trigger)
-      .start()
-
-  /** Streaming ingest onto the COMMIT LOG — THE capture ingest (the
-    * deprecated [[streamCaptures]] shim exists only for in-flight
-    * migrations off plain parquet): the same 10 s micro-batch file source,
-    * landing through the `graft-commitlog` sink, so the capture fact
-    * table gets the ACID layer's whole contract instead of the
+  /** Streaming ingest onto the COMMIT LOG — THE capture ingest: a 10 s
+    * micro-batch file source landing through the `graft-commitlog` sink,
+    * so the capture fact table gets the ACID layer's whole contract instead of the
     * single-writer one —
     *   - exactly-once via the log's (appId, batchId) txn markers (the
     *     engine checkpoint AND the log agree after any crash);

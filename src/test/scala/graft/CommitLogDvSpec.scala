@@ -656,4 +656,22 @@ class CommitLogDvSpec extends SparkSpec {
       .select("k").as[Long].collect().sorted
     assert(got.toSeq === (10L to 20L))
   }
+
+  test("copy-on-write apply after a dv apply keeps masked rows deleted") {
+    // one replica maintained by both apply forms: the dv form masks a
+    // deleted key, then the copy-on-write form rewrites the same file for
+    // another key — its rewrite must read through the mask, or the
+    // deleted key comes back
+    val rep = freshTable()
+    CommitLog.append(spark, rep,
+      (0 until 10).map(i => (i.toLong, s"v$i")).toDF("k", "s").coalesce(1))
+    assert(CommitLog.snapshot(rep).files.size === 1, "both keys must share one file")
+    def change(k: Long, s: String, ct: String) =
+      Seq((k, s, ct, 1L)).toDF("k", "s", "_change_type", "_commit_version")
+    assert(CommitLog.applyChangesDv(spark, rep, change(3L, "v3", "delete"), Seq("k")) === 1L)
+    assert(CommitLog.applyChanges(spark, rep, change(5L, "new", "update_postimage"), Seq("k")) === 2L)
+    val back = CommitLog.read(spark, rep).as[(Long, String)].collect().sortBy(_._1)
+    assert(back.toSeq === (0L until 10L).filter(_ != 3L)
+      .map(k => (k, if (k == 5L) "new" else s"v$k")))
+  }
 }
