@@ -4,25 +4,18 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
-  * Each query gets one untimed warmup run (whole-stage codegen compile +
-  * JIT — at small scale factors that overhead is several times the actual
-  * query cost and run-to-run variance is 3-10x), then the best of its
-  * timed samples is reported. Queries run in sorted name order so timings
-  * are comparable across rounds.
-  *
-  * Host-stall defense (this box shows intermittent multi-second slow
-  * phases under identical plans; the r6 artifact recorded a 2.7 s query at
-  * 17.3 s because one stall spanned warmup AND all three samples):
-  *   - the per-round artifacts BENCH_r*.json in the working directory are
-  *     parsed at startup and each query's historical median becomes its
-  *     plausibility bar — any best-of-2 above 3x that median is resampled
-  *     (up to 4 extra times) until it lands under the bar or the cap hits;
-  *   - ALL raw samples are recorded in the file artifact, so a stall that
-  *     outlasts every sample is at least visible in history instead of
-  *     masquerading as query cost;
-  *   - queries with no history fall back to the old fixed 2 s bar.
+  * Fixed protocol, whatever else sits in the working directory: each
+  * query gets one untimed warmup run (whole-stage codegen compile + JIT —
+  * at small scale factors that overhead is several times the actual query
+  * cost), then [[Samples]] timed runs; the headline is the min of them.
+  * Queries run in sorted name order so timings are comparable across
+  * runs. Every raw sample goes into the file artifact, so a host stall
+  * that outlasts all samples is visible there instead of masquerading as
+  * query cost.
   */
 object Bench {
+  private val Samples = 3
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -35,70 +28,6 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-
-    // Per-query medians from the committed round artifacts. The driver's
-    // BENCH_r{N}.json wraps a TRUNCATED stdout tail with escaped quotes,
-    // and bench_full.json is this main's own complete record — so the
-    // parse is deliberately crude: strip backslash-escapes, regex every
-    // "name":number pair anywhere in the file, and keep only names that
-    // are actual registered queries (which also drops wrapper fields like
-    // "cpus" or "sf" without needing real JSON parsing).
-    val knownQueries = SparkEntry.queries.keySet
-    val entryRe = """"([A-Za-z0-9_]+)":(-?[0-9][0-9.eE+-]*)""".r
-    val sfRe = """"sf":"([^"]*)"""".r
-    val sfBase = new java.io.File(sfDir).getName
-    // Artifact scan directory (advice r13): cwd only if it actually holds
-    // the repo's BENCH history — launched from any other cwd, fall back to
-    // SPARK_GRAFT_REPO_DIR (or this class's jar location being under the
-    // repo is NOT assumed; the env var is the explicit anchor). Without an
-    // anchor a silent round-1 inference could overwrite a prior round's
-    // artifact, the exact failure the round stamp exists to prevent — so
-    // a missing history is WARNED, never silent.
-    val scanDir: java.io.File = {
-      val cwd = new java.io.File(".")
-      def hasHist(d: java.io.File) =
-        Option(d.listFiles()).getOrElse(Array.empty)
-          .exists(_.getName.matches("BENCH_r\\d+\\.json"))
-      if (hasHist(cwd)) cwd
-      else sys.env.get("SPARK_GRAFT_REPO_DIR").map(new java.io.File(_))
-        .filter(hasHist)
-        .getOrElse {
-          System.err.println(
-            "[bench] WARNING: no BENCH_r*.json history under cwd or " +
-            "SPARK_GRAFT_REPO_DIR — round inference falls back to r1; " +
-            "set SPARK_GRAFT_BENCH_OUT to avoid overwriting a prior " +
-            "round's artifact")
-          cwd
-        }
-    }
-    val hist: Map[String, Double] = {
-      val files = Option(scanDir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.matches("BENCH_(r\\d+(_full)?|[^/]+_full)\\.json") || f.getName == "bench_full.json")
-      val vals = files.flatMap { f =>
-        try {
-          val s = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-            .replace("\\", "")
-          // an artifact recorded at a DIFFERENT scale factor would make
-          // every bar wrong (3x an sf0.1 median is no bar at sf1, and at
-          // sf0.01 it would resample everything); artifacts without an sf
-          // field predate the tag and were all sf0.1-era — kept only when
-          // this run is too
-          val artifactSf = sfRe.findFirstMatchIn(s)
-            .map(m => new java.io.File(m.group(1)).getName)
-          if (!artifactSf.getOrElse("sf0.1").equals(sfBase)) Nil
-          else
-            // samples arrays ("name":[..]) don't match the pair regex, so a
-            // bench_full from this same main contributes only its min values
-            entryRe.findAllMatchIn(s)
-              .map(m => m.group(1) -> m.group(2).toDouble)
-              .filter(p => knownQueries.contains(p._1)).toSeq
-        } catch { case _: Exception => Nil }
-      }.filter(_._2 > 0).groupBy(_._1)
-      vals.map { case (k, vs) =>
-        val sorted = vs.map(_._2).sorted
-        k -> sorted(sorted.length / 2)
-      }
     }
 
     // Optional subset run (the sf10 heavy-tail soak, r18 verdict #4):
@@ -119,16 +48,10 @@ object Bench {
         val samples =
           try {
             fn(spark, sfDir).count() // warmup: codegen + JIT, untimed
-            spark.catalog.clearCache()
-            val buf = scala.collection.mutable.ListBuffer(
-              timed(fn(spark, sfDir).count()), timed(fn(spark, sfDir).count()))
-            val bar = hist.get(name).map(m => math.max(3 * m, 0.5)).getOrElse(2.0)
-            var extra = 0
-            while (buf.min > bar && extra < 4) {
+            List.fill(Samples) {
               spark.catalog.clearCache()
-              buf += timed(fn(spark, sfDir).count()); extra += 1
+              timed(fn(spark, sfDir).count())
             }
-            buf.toList
           } catch { case _: Throwable => List(-1.0) }
         name -> samples
       }
@@ -144,24 +67,14 @@ object Bench {
     println(line)
     // The driver captures only the stdout TAIL, which truncated a third of
     // every committed BENCH_r{N}.json mid-dict — the file is the full
-    // record, with raw per-query sample arrays so a host stall that beats
-    // the resampler is diagnosable from the artifact alone.
+    // record, with raw per-query sample arrays so a host stall is
+    // diagnosable from the artifact alone.
     val samplesJson = results
       .map { case (k, v) => s"\"" + k + "\":" + v.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val full = s"""{"metric":"total","value":$total,"unit":"sec","failed":${failedNames.size},"failed_queries":$failedJson,"wall_ms_epoch":${System.currentTimeMillis()},"queries":$qs,"samples":$samplesJson,"sf":"$sfDir"}"""
-    // sf-stamped AND round-stamped default (judge ask r12 #2b: the r12
-    // run overwrote r11's only in-tree per-query record). The round is
-    // inferred as 1 + the highest committed driver artifact BENCH_r{N}
-    // .json — stable within a round (the driver writes its r{N} tail
-    // only at round end), so re-runs inside one round overwrite their
-    // own file but never a previous round's.
-    val round = Option(scanDir.listFiles()).getOrElse(Array.empty)
-      .flatMap(f => """BENCH_r(\d+)\.json""".r
-        .findFirstMatchIn(f.getName).map(_.group(1).toInt))
-      .foldLeft(0)(math.max) + 1
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      new java.io.File(scanDir, s"BENCH_${sfBase}_r${round}_full.json").getPath)
+      s"BENCH_${new java.io.File(sfDir).getName}_c${cpus}_full.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (full + "\n").getBytes("UTF-8"))
     catch { case e: Exception => System.err.println(s"bench file write failed: $e") }

@@ -291,7 +291,8 @@ object CommitLogRelation {
   * serialize on the log.
   *
   * Sink options: `table` (required), `appId` (default `stream`),
-  * `indexCol` (optional data-skipping bounds on appended files). */
+  * `indexCol` (optional data-skipping bounds on appended files), `store`
+  * (as for reads). */
 class CommitLogProvider
   extends RelationProvider with CreatableRelationProvider
   with StreamSinkProvider with DataSourceRegister {
@@ -374,7 +375,8 @@ class CommitLogProvider
     new graft.streaming.CommitLogSink(sqlContext,
       tableOf(parameters),
       parameters.getOrElse("appId", "stream"),
-      parameters.get("indexCol"))
+      parameters.get("indexCol"),
+      CommitLogProvider.storeFor(parameters))
   }
 }
 
@@ -398,7 +400,7 @@ object CommitLogProvider {
     namedStores.put(name, store); ()
   }
 
-  private[sources] def storeFor(parameters: Map[String, String]): CommitLog.LogStore =
+  private[graft] def storeFor(parameters: Map[String, String]): CommitLog.LogStore =
     parameters.get("store") match {
       case None | Some("local") => CommitLog.LocalStore
       case Some(n) => Option(namedStores.get(n)).getOrElse(

@@ -134,8 +134,7 @@ object Dispatch {
     * pathological request (a whale client's user_energy at 100×) can never
     * OOM the driver. 100k rows of dispatch-shaped output is single-digit
     * MB — far under any sane driver heap, far over any real
-    * request-scoped aggregate. Overridable per deployment via
-    * `spark.graft.dispatch.driverCsvMaxRows`. */
+    * request-scoped aggregate. */
   private[graft] val DriverCsvMaxRows: Int = 100000
 
   /** Single-file CSV, layout-compatible with the Spark writer
@@ -237,24 +236,15 @@ object Dispatch {
             .ofPattern("yyyy-MM-dd HH-ss").format(java.time.LocalDateTime.now())
           val path = s"$outDir/${req.fn}_${stamp}_req${req.id}"
           val result = fn(exec, sfDir)
-          // Result delivery is driver-side by default — the reference's
-          // own shape (pandas read_sql → to_csv, process.py:100-101 —
-          // the result ALWAYS transits the driver there) and ~160 ms
-          // cheaper per request than a Spark CSV job+commit round for
-          // these request-scoped aggregates. The driver buffer is
-          // size-capped (driverCsvMaxRows): an oversized result falls
-          // back to the distributed writer automatically, so the
-          // driver's heap is never a function of a request's result
-          // size. spark.graft.dispatch.driverCsv=false forces the
-          // distributed writer outright.
-          if (spark.conf.getOption("spark.graft.dispatch.driverCsv")
-              .forall(_.toBoolean))
-            writeCsvDriverSide(result, path,
-              spark.conf.getOption("spark.graft.dispatch.driverCsvMaxRows")
-                .map(_.toInt).getOrElse(DriverCsvMaxRows))
-          else
-            result.coalesce(1)
-              .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
+          // Result delivery is driver-side — the reference's own shape
+          // (pandas read_sql → to_csv, process.py:100-101 — the result
+          // ALWAYS transits the driver there) and ~160 ms cheaper per
+          // request than a Spark CSV job+commit round for these
+          // request-scoped aggregates. The driver buffer is size-capped
+          // (DriverCsvMaxRows): an oversized result falls back to the
+          // distributed writer automatically, so the driver's heap is
+          // never a function of a request's result size.
+          writeCsvDriverSide(result, path)
           Some(req.id -> path)
         } catch {
           case e: Exception =>
@@ -286,8 +276,7 @@ object Dispatch {
     // save/restore pattern like Ingest's) now lands on the clone, never
     // racing the caller's session state.
     val exec: SparkSession = org.apache.spark.sql.graft.SessionUtils.cloneSession(spark)
-    exec.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.getOption("spark.graft.dispatch.shufflePartitions").getOrElse("4"))
+    exec.conf.set("spark.sql.shuffle.partitions", "4")
     // Codegen amortizes over data volume; a dispatch request amortizes it
     // over ONE CSV-sized result, and because each request binds different
     // literal parameters every plan compiles FRESH generated code —
@@ -300,8 +289,7 @@ object Dispatch {
     // 16 measured as the knee on local[32] (8 → 4.2 s/100, 16 → 3.96,
     // 24 → 3.99, 48 regresses): wide enough to hide per-request planning
     // latency, narrow enough not to thrash the single driver scheduler.
-    val par = spark.conf.getOption("spark.graft.dispatch.parallelism")
-      .map(_.toInt).getOrElse(16).max(1)
+    val par = 16
     // Shared-scan reuse: every routed analytic starts from the same
     // enriched events frame (Tables.events — scan + JSON-path projection),
     // and a pass serves up to hundreds of requests, each of which would
@@ -316,14 +304,13 @@ object Dispatch {
     // narrowed/pre-filtered frame or a bucketed materialized view; the
     // per-pass persist-once discipline is the part that scales.
     val shared = graft.Tables.events(exec, sfDir)
-    val useShared = todo.length > 1 &&
-      spark.conf.getOption("spark.graft.dispatch.sharedScan").forall(_.toBoolean)
+    val useShared = todo.length > 1
     if (useShared) {
       shared.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       shared.count()
     }
     val fulfilled: Seq[(Long, String)] = try {
-      if (todo.length <= 1 || par == 1) todo.flatMap(runOne(exec)).toSeq
+      if (todo.length <= 1) todo.flatMap(runOne(exec)).toSeq
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(par, todo.length))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.CommitLog
+import graft.sources.{CommitLog, CommitLogProvider}
 import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
@@ -41,13 +41,14 @@ class ChangeFeedSource(sqlContext: SQLContext, table: String,
                        cdcMode: Boolean = false,
                        maxVersionsPerTrigger: Option[Int] = None,
                        maxRowsPerTrigger: Option[Long] = None,
-                       metadataPath: String = "") extends Source {
+                       metadataPath: String = "",
+                       store: CommitLog.LogStore) extends Source {
 
   private val spark = sqlContext.sparkSession
 
   override val schema: StructType =
-    if (cdcMode) ChangeFeedProvider.cdcSchema(spark, table)
-    else ChangeFeedProvider.tableSchema(spark, table)
+    if (cdcMode) ChangeFeedProvider.cdcSchema(spark, table, store)
+    else ChangeFeedProvider.tableSchema(spark, table, store)
 
   // Admission control (`maxVersionsPerTrigger`): cap how many commit
   // versions one micro-batch covers, so a stream started over a table
@@ -86,7 +87,7 @@ class ChangeFeedSource(sqlContext: SQLContext, table: String,
   }
 
   override def getOffset: Option[Offset] = {
-    val tip = CommitLog.latestVersion(table)
+    val tip = CommitLog.latestVersion(table, store)
     if (tip < 0) return None
     val byVersions = maxVersionsPerTrigger match {
       case Some(m) => math.min(tip, lastOffered + m)
@@ -108,7 +109,7 @@ class ChangeFeedSource(sqlContext: SQLContext, table: String,
         var rows = 0L
         var full = false
         while (!full && e < byVersions) {
-          val r = CommitLog.versionFeedRows(table, e + 1, cdcMode)
+          val r = CommitLog.versionFeedRows(table, e + 1, cdcMode, store)
           if (e > lastOffered && rows + r > maxRows) full = true
           else { e += 1; rows += r; if (rows >= maxRows) full = true }
         }
@@ -137,14 +138,14 @@ class ChangeFeedSource(sqlContext: SQLContext, table: String,
       // streaming face of CommitLog.readChangesCdc (replayed windows are
       // identical because commits and change files are immutable)
       import org.apache.spark.sql.functions.col
-      CommitLog.readChangesCdc(spark, table, from, Some(version(end))) match {
+      CommitLog.readChangesCdc(spark, table, from, Some(version(end)), store) match {
         case (_, Some(df)) => StreamingShim.streamingBatchOf(
           df.select(schema.fieldNames.map(col(_)).toSeq: _*), schema)
         case (_, None) =>
           StreamingShim.streamingParquetBatch(spark, schema, Nil)
       }
     } else {
-      val files = CommitLog.changedFiles(table, from, version(end))
+      val files = CommitLog.changedFiles(table, from, version(end), store)
         .map(f => Paths.get(table, f).toString)
       StreamingShim.streamingParquetBatch(spark, schema, files)
     }
@@ -173,7 +174,8 @@ class ChangeFeedSource(sqlContext: SQLContext, table: String,
   * backfills replayable. */
 class ChangeFeedRelation(override val sqlContext: SQLContext,
                          table: String, cdcMode: Boolean,
-                         fromVersion: Long, toVersion: Long)
+                         fromVersion: Long, toVersion: Long,
+                         store: CommitLog.LogStore)
   extends org.apache.spark.sql.sources.BaseRelation
   with org.apache.spark.sql.sources.TableScan {
 
@@ -185,8 +187,8 @@ class ChangeFeedRelation(override val sqlContext: SQLContext,
     * window's change files don't carry. (The streaming source pins the
     * tip schema instead because its window END is the moving tip.) */
   override val schema: StructType = {
-    val base = CommitLog.tableSchema(table, Some(toVersion)).getOrElse(
-      ChangeFeedProvider.tableSchema(spark, table)) // legacy meta-less log
+    val base = CommitLog.tableSchema(table, Some(toVersion), store).getOrElse(
+      ChangeFeedProvider.tableSchema(spark, table, store)) // legacy meta-less log
     if (cdcMode)
       StructType(base.fields.map(_.copy(nullable = true)) ++
         Seq(org.apache.spark.sql.types.StructField("_change_type",
@@ -202,9 +204,9 @@ class ChangeFeedRelation(override val sqlContext: SQLContext,
     import org.apache.spark.sql.functions.col
     val window: Option[DataFrame] =
       if (cdcMode)
-        CommitLog.readChangesCdc(spark, table, fromVersion, Some(toVersion))._2
+        CommitLog.readChangesCdc(spark, table, fromVersion, Some(toVersion), store)._2
       else
-        CommitLog.readChanges(spark, table, fromVersion, Some(toVersion))._2
+        CommitLog.readChanges(spark, table, fromVersion, Some(toVersion), store)._2
     val df = window match {
       case Some(w) => w.select(schema.fieldNames.toSeq.map(col): _*)
       case None => spark.createDataFrame(
@@ -233,7 +235,10 @@ class ChangeFeedRelation(override val sqlContext: SQLContext,
   * version cap — whichever binds first ends the batch), and `cdc`
   * (optional, `"true"` switches to the row-level change feed:
   * `_change_type`-typed rows with `_commit_version`, retractions
-  * included — the streaming face of [[CommitLog.readChangesCdc]]). */
+  * included — the streaming face of [[CommitLog.readChangesCdc]]).
+  * `store` (optional, both faces) names a LogStore registered via
+  * [[CommitLogProvider.registerStore]], as for `graft-commitlog`; every
+  * log listing and read of the feed goes through it. */
 class ChangeFeedProvider extends StreamSourceProvider
   with org.apache.spark.sql.sources.RelationProvider with DataSourceRegister {
 
@@ -243,13 +248,14 @@ class ChangeFeedProvider extends StreamSourceProvider
                               parameters: Map[String, String])
       : org.apache.spark.sql.sources.BaseRelation = {
     val table = tableOf(parameters)
-    val tip = CommitLog.latestVersion(table)
+    val store = CommitLogProvider.storeFor(parameters)
+    val tip = CommitLog.latestVersion(table, store)
     require(tip >= 0, s"$table has no commits — append before reading its feed")
     val from = parameters.get("startingVersion").map(_.toLong).getOrElse(-1L)
     val to = parameters.get("endingVersion").map(_.toLong).getOrElse(tip)
     require(to <= tip, s"endingVersion $to does not exist (tip is $tip)")
     require(from <= to, s"empty window: startingVersion $from > endingVersion $to")
-    new ChangeFeedRelation(sqlContext, table, cdcOf(parameters), from, to)
+    new ChangeFeedRelation(sqlContext, table, cdcOf(parameters), from, to, store)
   }
 
   private def tableOf(parameters: Map[String, String]): String =
@@ -265,10 +271,11 @@ class ChangeFeedProvider extends StreamSourceProvider
                             parameters: Map[String, String]): (String, StructType) =
     (shortName(),
       schema.getOrElse {
+        val store = CommitLogProvider.storeFor(parameters)
         if (cdcOf(parameters))
-          ChangeFeedProvider.cdcSchema(sqlContext.sparkSession, tableOf(parameters))
+          ChangeFeedProvider.cdcSchema(sqlContext.sparkSession, tableOf(parameters), store)
         else
-          ChangeFeedProvider.tableSchema(sqlContext.sparkSession, tableOf(parameters))
+          ChangeFeedProvider.tableSchema(sqlContext.sparkSession, tableOf(parameters), store)
       })
 
   override def createSource(sqlContext: SQLContext, metadataPath: String,
@@ -282,7 +289,8 @@ class ChangeFeedProvider extends StreamSourceProvider
       s"maxRowsPerTrigger must be positive, got $m"))
     new ChangeFeedSource(sqlContext, tableOf(parameters),
       parameters.get("startingVersion").map(_.toLong).getOrElse(-1L),
-      cdcOf(parameters), maxVersions, maxRows, metadataPath)
+      cdcOf(parameters), maxVersions, maxRows, metadataPath,
+      CommitLogProvider.storeFor(parameters))
   }
 }
 
@@ -294,20 +302,22 @@ object ChangeFeedProvider {
     * perfectly good schema, and a RUNNING stream must be able to restart
     * from its checkpoint while the table is momentarily empty. */
   private[streaming] def tableSchema(
-      spark: org.apache.spark.sql.SparkSession, table: String): StructType = {
-    require(CommitLog.latestVersion(table) >= 0,
+      spark: org.apache.spark.sql.SparkSession, table: String,
+      store: CommitLog.LogStore): StructType = {
+    require(CommitLog.latestVersion(table, store) >= 0,
       s"$table has no commits yet — append before streaming from it")
-    CommitLog.tableSchema(table).getOrElse(
+    CommitLog.tableSchema(table, store = store).getOrElse(
       // legacy log with no meta actions: fall back to the live-file read
-      CommitLog.read(spark, table).schema)
+      CommitLog.read(spark, table, store = store).schema)
   }
 
   /** The row-level feed's schema: the table columns (all nullable — a
     * window may span an evolution boundary) plus the change typing. */
   private[streaming] def cdcSchema(
-      spark: org.apache.spark.sql.SparkSession, table: String): StructType = {
+      spark: org.apache.spark.sql.SparkSession, table: String,
+      store: CommitLog.LogStore): StructType = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField}
-    StructType(tableSchema(spark, table).fields.map(_.copy(nullable = true)) ++
+    StructType(tableSchema(spark, table, store).fields.map(_.copy(nullable = true)) ++
       Seq(StructField("_change_type", StringType),
           StructField("_commit_version", LongType)))
   }
@@ -327,14 +337,15 @@ object ChangeFeedProvider {
   * pipeline its own so two writers' batch ids don't collide), `indexCol`
   * (optional: record per-file min/max data-skipping bounds on the
   * appended files, so downstream [[CommitLog.readWhere]] prunes
-  * stream-written data the same as batch-written). */
+  * stream-written data the same as batch-written), `store` (optional: a
+  * registered LogStore, as for the batch faces). */
 class CommitLogSink(sqlContext: SQLContext, table: String, appId: String,
-                    indexCol: Option[String])
+                    indexCol: Option[String], store: CommitLog.LogStore)
   extends org.apache.spark.sql.execution.streaming.Sink {
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     CommitLog.appendOnce(sqlContext.sparkSession, table,
-      StreamingShim.batchify(data), appId, batchId, indexCol)
+      StreamingShim.batchify(data), appId, batchId, indexCol, store)
     ()
   }
 

@@ -20,7 +20,8 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * registered sqlQ11 executes EXACTLY ONE lineitem file scan, while the
   * retained legacy shape is allowed 1-or-2 (whichever the planner picks
   * today — the point is that its count is not pinned). The wall-clock A/B
-  * lives in AbQ11 (Test/runMain graft.AbQ11) and BASELINE.md §r14. */
+  * that closed the anomaly is recorded in BASELINE.md §r14;
+  * `graft.Dev time sql_q11` re-times the registered shape. */
 class Q11PlanSpec extends SparkSpec {
 
   /** Number of EXECUTED FileSourceScanExec nodes over lineitem during `f`,
