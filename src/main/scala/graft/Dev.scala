@@ -19,8 +19,9 @@ import scala.collection.mutable
   *     CPU, shuffle bytes and input records, and how much of the query's
   *     wall time the jobs cover.
   *   - `stacks q...` — samples every runnable thread's stack at ~5 ms
-  *     during one warm run and prints the most frequent (thread group,
-  *     first interesting frame) pairs: what the driver gap consists of.
+  *     during one warm run (threads parked in a native poll or wait are
+  *     skipped) and prints the most frequent (thread group, first
+  *     interesting frame) pairs: what the driver gap consists of.
   *   - `plans [--out dir --suffix s] q...` — the formatted physical plan
   *     of each query, printed, or written to `dir/<query>_<s>.txt` so a
   *     change can commit before/after plan evidence.
@@ -232,6 +233,15 @@ object Dev {
       .getOrElse("<empty>")
   }
 
+  /** A thread whose top frame is a native poll, wait, select or accept
+    * is parked in the kernel even though the JVM reports it `RUNNABLE`
+    * (netty's `epollWait` event loops, NIO selectors): sampling it would
+    * bury the frames that do work under idle I/O threads. */
+  private[graft] def parkedInNative(st: Array[StackTraceElement]): Boolean =
+    st.headOption.exists(e => e.isNativeMethod && ParkedNative.matches(e.getMethodName))
+
+  private val ParkedNative = "(?i).*(poll|wait|select|accept).*".r
+
   private def stacks(spark: SparkSession, sfDir: String, names: Seq[String]): Unit =
     resolve(spark, sfDir, names).foreach { case (n, q) =>
       q().count() // warmup
@@ -242,7 +252,7 @@ object Dev {
         while (run) {
           Thread.getAllStackTraces.forEach { (t, st) =>
             if (st.nonEmpty && t.getState == Thread.State.RUNNABLE &&
-                !t.getName.contains("sampler")) {
+                !parkedInNative(st) && !t.getName.contains("sampler")) {
               val grp =
                 if (t.getName == "main") "main"
                 else if (t.getName.contains("Executor task launch")) "task"
@@ -284,6 +294,15 @@ object Dev {
       }
     }
 
+  /** Queries that build a table in a fresh temporary directory print its
+    * random name in their scan nodes; `<tmp>/occ_sql*` stands for
+    * `/tmp/occ_sql<digits>` so the plan document is the same on every
+    * run of one tree. */
+  private[graft] def stableTempPaths(text: String): String =
+    text.replaceAll(java.util.regex.Pattern.quote(
+      System.getProperty("java.io.tmpdir").stripSuffix("/")) +
+      "/([^/\\s,)\\]]*?)\\d+(?=[/\\s,)\\]]|$)", "<tmp>/$1*")
+
   /** Every registered query exactly once (alphabetical, with an index):
     * the compact plan tree, without the `AdaptiveSparkPlan` root and the
     * node-detail section. History lives in git, not in the document. */
@@ -312,7 +331,7 @@ object Dev {
     sb ++= "\n## Plans\n"
     resolve(spark, sfDir, names).foreach { case (n, q) =>
       println(s"[plandoc] $n")
-      val text = formatted(q())
+      val text = stableTempPaths(formatted(q()))
         .split("\n\n").head.linesIterator
         .filterNot(l => l.startsWith("== Physical Plan ==") ||
           l.startsWith("AdaptiveSparkPlan"))

@@ -586,12 +586,12 @@ object Dedup {
       .orderBy(col("jaccard").desc, col("d1"), col("d2"))
       .limit(topK)
     // Materialize the (≤1000-row) result eagerly, then RELEASE both
-    // materialized inputs before returning — the dedupGroups pattern. A
-    // long-lived session (bench loop, serving JVM) calling this
-    // per-corpus would otherwise pin a shingle explosion + signature
-    // table in executor storage per invocation (the r3 review's storage
-    // leak). With localCheckpoint the blocks belong to the checkpointed
-    // RDD, not the CacheManager, so the release goes through
+    // materialized inputs before returning. A long-lived session (bench
+    // loop, serving JVM) calling this per-corpus would otherwise pin a
+    // shingle explosion + signature table in executor storage per
+    // invocation (the r3 review's storage leak). With localCheckpoint
+    // the blocks belong to the checkpointed RDD, not the CacheManager,
+    // so the release goes through
     // [[releaseLocalCheckpoint]]; it is only safe AFTER the last
     // consumer materialized — which `out`'s eager checkpoint is.
     if (!checkpoint) {
@@ -807,22 +807,19 @@ object Dedup {
     * near-dup clustering for the same reason), and shrinks the shingle
     * explosion to distinct-content size as a bonus.
     *
-    * Components are computed by distributed min-label propagation — each
-    * round joins the current labels across the symmetric edge set and
-    * keeps the per-node minimum, converging in O(graph diameter) rounds
-    * (the driver loop checks a changed-row count, the standard Spark
-    * iterative-algorithm shape; every round is two shuffles over the
-    * edge table, never a driver-side graph). Both the edge table and
-    * each round's labels are lineage-truncated: an iterative dataflow
-    * MUST truncate lineage, otherwise round N's logical plan nests all
-    * N-1 predecessors and analysis/optimization time grows without bound
-    * (measured: minutes at round ~7 vs seconds checkpointed). HOW to
-    * truncate is injected via [[Truncate]] — `localCheckpoint`
+    * Components come from [[components]]: a min-root union-find inside
+    * the task(s) holding the edge table. At bench and fixture scale the
+    * edge table is one partition, so one task labels every node with its
+    * component minimum and no iterative job runs at all; past ~200k
+    * edges each partition contracts its edges locally and a
+    * pointer-jumping loop joins the partial components. Lineage
+    * truncation is injected via [[Truncate]] — `localCheckpoint`
     * single-JVM, reliable `checkpoint` on a cluster (or whenever
     * `GRAFT_CC_CHECKPOINT_DIR` is set, which is how the one-shot query
     * forms reach the reliable path; TruncateSpec pins both paths to
-    * identical components). The DuckDB oracle states the same fixpoint
-    * as a recursive CTE — same components, declarative formulation. */
+    * identical components), and every frame this query materializes goes
+    * through it. The DuckDB oracle states the same fixpoint as a
+    * recursive CTE — same components, declarative formulation. */
   def dedupGroups(spark: SparkSession, dir: String, maxIters: Int = 50,
                   truncate: Option[Truncate] = None): DataFrame = {
     val ck = Truncate.resolve(truncate)
@@ -831,70 +828,112 @@ object Dedup {
     // key carries the identical text)
     val keyed = Tables.documents(spark, dir)
       .select(col("doc_id"), md5(col("text")).as("ckey"), col("text"))
-    // materialized ONCE (same truncation strategy as the loop tables):
-    // both the shingle front here and the expansion join after the loop
+    // materialized ONCE (same truncation strategy as the edge table):
+    // both the shingle front here and the expansion join at the end
     // read reps, and without the checkpoint each consumer would re-run
     // the corpus scan AND the distinct-content groupBy shuffle. keyed
     // itself is deliberately NOT materialized — its second evaluation is
     // a narrow codegen'd scan (the boilerplateRatio trade).
-    val reps = ck.mark(keyed.groupBy(col("ckey"))
+    // Widened on the content key, so the widening exchange IS the
+    // groupBy's exchange: the aggregation, the shingle explode and the
+    // map-side shingle count below run at scan width instead of in the
+    // one task AQE coalesces a ~1 MB shuffle into (on one unsplittable
+    // fixture file that one task was most of the query's time).
+    val reps = ck.mark(Tables.widenedBy(keyed, col("ckey")).groupBy(col("ckey"))
       .agg(min(col("doc_id")).as("doc_id"), min(col("text")).as("text")))
-    // (widening reps before the shingle explode was TRIED here and
-    // reverted: unlike the hashing pipelines, this explode carries no
-    // md5 work — the A/B showed the extra exchange's task overhead eats
-    // the parallelism gain at bench scale, and at 100 TB reps is already
-    // wide.)
-    val sh = shingleRows(reps)
-    // Per-shingle doc count AND per-shingle min doc in one window pass:
-    // the min seeds each node's label, so every single-shingle clique is
-    // already converged before the first propagation round — rounds are
-    // then only needed for chains that thread through multiple shingles.
-    val wsh = org.apache.spark.sql.expressions.Window.partitionBy("shingle")
-    // materialized ONCE (eager localCheckpoint — was persist() through
-    // r18): read by both sides of the edge self-join and the label
-    // seeding; without it the shingle explode + window pipeline runs
-    // three times per invocation, and as a CACHED subtree under AQE each
-    // consumer re-planned it into extra zero-work stage jobs (the
-    // minhashLshFrom finding, same round).
-    val rare = sh.withColumn("nd", count(lit(1)).over(wsh))
-      .withColumn("bucket_min", min(col("doc_id")).over(wsh))
-      .filter(col("nd").between(2, 3)).drop("nd")
-      .localCheckpoint(true)
-    // No edge dedup: a pair sharing k rare shingles appears k times, and
-    // min-label propagation is idempotent under duplicate edges — a
-    // distinct() here would be a full shuffle of the edge table spent
-    // removing rows the groupBy(min) absorbs for free.
-    val edges = rare.as("a")
-      .join(rare.as("b"), col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("src"), col("b.doc_id").as("dst"))
-    // Rare-token blocking shrinks the graph by orders of magnitude versus
-    // the corpus, so the loop's tables get their own partition count sized
-    // from the actual edge cardinality (~100k edges per partition) instead
-    // of inheriting the corpus-sized shuffle width — at sf0.1 that is ONE
-    // partition (2.4k edges) and every round is a single-task job; a
-    // 100 TB corpus with 10^8 surviving edges gets ~1000. The count reads
-    // the self-join off the cached `rare` table, so sizing costs one cheap
-    // job instead of a second checkpointed copy of the edge table.
-    // Materialize the self-join ONCE (eager checkpoint), then size the
-    // loop from a cheap scan of the materialized edges — previously the
-    // sizing count and the sym build each executed the join.
+    // Rare-shingle blocking in one aggregation: a shingle held by 2-3
+    // representatives links them. Linking each holder to the smallest
+    // (lo–hi, plus lo–mid for three, mid = sum − lo − hi) gives exactly
+    // the components the all-pairs clique would, from fixed-width
+    // aggregate buffers with a map-side combine: no window sort, no
+    // self-join, no second table to materialize. No edge dedup: a pair
+    // sharing k rare shingles appears up to k times, and union-find is
+    // idempotent under duplicate edges.
+    val edges = shingleRows(reps).groupBy(col("shingle"))
+      .agg(count(lit(1)).as("nd"), min(col("doc_id")).as("lo"),
+        max(col("doc_id")).as("hi"), sum(col("doc_id")).as("sum"))
+      .filter(col("nd").between(2, 3))
+      .select(col("lo").as("src"), explode(
+        when(col("nd") === 3, array(col("hi"), col("sum") - col("lo") - col("hi")))
+          .otherwise(array(col("hi")))).as("dst"))
+    val labels = components(edges, ck, maxIters)
+    // expand representative labels back to every document through the
+    // content key (one corpus-sized equi-join on ckey; reps/labels are
+    // distinct-content sized). Unlabeled reps (no rare shingle) label
+    // their content group by the representative id — exact-dup groups
+    // cluster even when shingle blocking finds them nothing.
+    keyed.select(col("doc_id"), col("ckey"))
+      .join(reps.select(col("ckey"), col("doc_id").as("rep_id")), Seq("ckey"))
+      .join(labels.select(col("doc_id").as("rep_id"), col("lab")), Seq("rep_id"), "left")
+      .select(col("doc_id"), coalesce(col("lab"), col("rep_id")).as("component"))
+      .orderBy(col("component"), col("doc_id"))
+  }
+
+  /** Connected components of the undirected graph `edges(src, dst)`
+    * (bigint node ids): one `(doc_id, lab)` row per node that has an
+    * edge, `lab` = the smallest node id of its component. Duplicate
+    * edges and either orientation are fine.
+    *
+    * The edge table is materialized once through `ck`; its row count
+    * sizes the work at ~100k edges per partition, capped at the default
+    * parallelism. Each partition then runs [[minRoots]], a min-root
+    * union-find over its edges, in one task.
+    *   - `nParts == 1` (under 200k edges — every fixture and bench
+    *     scale; sf0.1 has 824): the one partition saw the whole graph,
+    *     so its roots ARE the component minima. No further job runs.
+    *   - `nParts > 1`: each partition's roots are only local. The
+    *     `(node, local root)` pairs are a contracted graph with the same
+    *     components (local-then-global contraction, Kiveris et al. 2014),
+    *     and min-label propagation with pointer jumping finishes the job:
+    *     each round joins the labels across the symmetric pair set, keeps
+    *     the per-node minimum and follows label-of-label, converging in
+    *     O(log diameter) rounds of the CONTRACTED graph. Every round is
+    *     truncated through `ck`: an iterative dataflow that does not
+    *     truncate nests all earlier rounds in round N's plan (measured:
+    *     minutes of analysis at round ~7). Unconverged after `maxIters`
+    *     rounds is an error, never a silently split component.
+    *
+    * The typed `mapPartitions` is a deliberate exception to this
+    * module's no-UDF rule: the closure runs once per PARTITION over
+    * primitive longs, not once per row through the expression engine,
+    * and it spares the ~35 single-task jobs an iterative SQL loop spends
+    * on a graph this small — cost that is pure job-scheduling latency.
+    *
+    * `parts` overrides the sized partition count (specs force the
+    * multi-partition path on small graphs with it). On return every
+    * frame read from `edges` is materialized. */
+  private[graft] def components(edges: DataFrame, ck: Truncate, maxIters: Int,
+                                parts: Option[Int] = None): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
     // mark (lazy) + count: the count IS the materializing action, so the
-    // checkpoint costs no extra job — same fusion on every loop table
-    // below (the loop's cost at bench scale is almost pure per-job
-    // scheduling latency; at 100 TB the same fusion just saves one pass).
-    val edgesCk = ck.mark(edges)
-    val nParts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
+    // checkpoint costs no extra job
+    val edgesCk = ck.mark(edges.select(col("src"), col("dst")))
+    val sized = math.max(1, math.min(spark.sparkContext.defaultParallelism,
       (edgesCk.count() / 100000L).toInt))
-    // Symmetric edges partitioned on dst — the key every loop join probes
-    // — so the per-round join never re-shuffles the edge table.
-    val sym = edgesCk.union(edgesCk.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(nParts, col("dst")).transform(ck.mark(_))
-    // labels stays EAGER: the release below requires both of rare's
-    // consumers materialized, and labels is the last one (sym reads the
-    // already-counted edgesCk blocks, so its lazy mark is safe)
-    var labels = ck(rare.groupBy(col("doc_id")).agg(min(col("bucket_min")).as("lab"))
+    val nParts = parts.getOrElse(sized)
+    val spread =
+      if (nParts == 1) edgesCk.coalesce(1) else edgesCk.repartition(nParts, col("src"))
+    val roots = spread.as[(Long, Long)].mapPartitions(minRoots).toDF("doc_id", "lab")
+    if (nParts == 1) roots else propagate(roots, ck, nParts, maxIters)
+  }
+
+  /** Global step of [[components]] for `nParts > 1`: min-label
+    * propagation with pointer jumping over the per-partition
+    * `(doc_id, lab)` pairs, to the component minimum. */
+  private def propagate(roots: DataFrame, ck: Truncate, nParts: Int,
+                        maxIters: Int): DataFrame = {
+    // labels stays EAGER and materializes the marked pairs; sym reads
+    // those blocks and is materialized by the first round's count
+    val pairs = ck.mark(roots)
+    var labels = ck(pairs.groupBy(col("doc_id")).agg(min(col("lab")).as("lab"))
       .repartition(nParts, col("doc_id")))
-    releaseLocalCheckpoint(rare) // both consumers are materialized
+    // Symmetric node–root pairs partitioned on dst — the key every loop
+    // join probes — so the per-round join never re-shuffles them.
+    val star = pairs.filter(col("doc_id") =!= col("lab"))
+      .select(col("doc_id").as("src"), col("lab").as("dst"))
+    val sym = star.union(star.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(nParts, col("dst")).transform(ck.mark(_))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
@@ -929,22 +968,38 @@ object Dedup {
       converged = changed == 0
       iter += 1
     }
-    // Unconverged labels are WRONG labels (a >maxIters-diameter chain
-    // would silently split one true duplicate group into several) — fail
-    // loudly instead of returning them.
     if (!converged)
       throw new IllegalStateException(
-        s"dedupGroups did not converge within $maxIters rounds — graph diameter exceeds the cap; raise maxIters")
-    // expand representative labels back to every document through the
-    // content key (one corpus-sized equi-join on ckey; reps/labels are
-    // distinct-content sized). Unlabeled reps (no rare shingle) label
-    // their content group by the representative id — exact-dup groups
-    // cluster even when shingle blocking finds them nothing.
-    keyed.select(col("doc_id"), col("ckey"))
-      .join(reps.select(col("ckey"), col("doc_id").as("rep_id")), Seq("ckey"))
-      .join(labels.select(col("doc_id").as("rep_id"), col("lab")), Seq("rep_id"), "left")
-      .select(col("doc_id"), coalesce(col("lab"), col("rep_id")).as("component"))
-      .orderBy(col("component"), col("doc_id"))
+        s"components did not converge within $maxIters rounds — graph diameter exceeds the cap; raise maxIters")
+    labels
+  }
+
+  /** Min-root union-find over one partition's edges: every endpoint seen,
+    * paired with the smallest node id connected to it through these
+    * edges. Linking the larger root under the smaller keeps every root
+    * its set's minimum; path halving keeps finds near-constant. Output is
+    * sorted by node, so a partition's result is deterministic. */
+  private def minRoots(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      while (parent(x) != x) {
+        val g = parent(parent(x))
+        parent(x) = g
+        x = g
+      }
+      x
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val ra = find(a)
+      val rb = find(b)
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val nodes = parent.keys.toArray
+    java.util.Arrays.sort(nodes)
+    nodes.iterator.map(n => (n, find(n)))
   }
 
   // --- canonical-document selection per duplicate cluster --------------------

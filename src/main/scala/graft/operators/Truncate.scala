@@ -2,8 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage-truncation strategy for iterative dataflows (the CC loop in
-  * [[Dedup.dedupGroups]], the k-means loop in [[Similarity]]).
+/** Lineage-truncation strategy for multi-consumer and iterative
+  * dataflows: every frame the connected-components query
+  * [[Dedup.dedupGroups]] materializes (the content representatives, the
+  * edge table and, past one edge partition, each round of the
+  * label-propagation loop in [[Dedup.components]]), and the k-means loop
+  * in [[Similarity]].
   *
   * Iterative plans MUST truncate lineage each round or round N's logical
   * plan nests all N-1 predecessors. HOW they truncate is a deployment

@@ -71,6 +71,10 @@ class CommitLogRelation private[sources] (override val sqlContext: SQLContext,
     * one stable key). */
   private[graft] def tablePath: String = table
 
+  /** Plan nodes print the relation: name what it reads, not an identity
+    * hash, so a plan's text is the same on every run. */
+  override def toString: String = s"CommitLogRelation($table, v${snap.version})"
+
   private val spark = sqlContext.sparkSession
   // the pinned snapshot's full state: file list, bounds/zonemaps/blooms,
   // live deletion vectors, log-carried schema — one replay at load time

@@ -181,6 +181,11 @@ class ChangeFeedRelation(override val sqlContext: SQLContext,
 
   private val spark = sqlContext.sparkSession
 
+  /** Names the table and the version window (exclusive floor, inclusive
+    * end), so a plan's text is the same on every run. */
+  override def toString: String =
+    s"ChangeFeedRelation($table, versions ($fromVersion, $toVersion]${if (cdcMode) ", cdc" else ""})"
+
   /** Schema AS OF the window's END, not the tip: a bounded window that
     * predates a schema evolution must type as the schema its rows were
     * committed under — resolving at the tip would select columns the

@@ -1,0 +1,60 @@
+package graft
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import graft.operators.Dedup
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+
+import scala.collection.mutable
+
+/** `dedupGroups` is job-scheduling bound at fixture and bench scale, so
+  * its Spark job count is the regression metric. On one edge partition
+  * the components come from one union-find task and the query runs no
+  * label-propagation loop: its jobs are the content-representative
+  * aggregation and shingle count, the edge count, and the final expansion
+  * join. A loop (sizing, symmetric edges, label seeding, then at least
+  * one multi-job round) costs several times as many. */
+class CcJobCountSpec extends SparkSpec {
+
+  /** Measured on the sf0.001 fixture at `local[4]`, 4 shuffle partitions:
+    * the loop-free plan runs 9 jobs, the label-propagation loop ran 48. */
+  private val LoopFreeJobs = 9
+
+  /** Jobs started under `tag` while `body` runs. A fence job under a
+    * second tag runs afterwards; the listener bus delivers events in
+    * order, so once the fence's end is seen every earlier event is. */
+  private def jobsTagged(tag: String)(body: => Unit): Int = {
+    val fenceTag = tag + "-fence"
+    val tagged = mutable.Set.empty[Int]
+    val fenceJobs = mutable.Set.empty[Int]
+    val fenced = new CountDownLatch(1)
+    def tags(e: SparkListenerJobStart): Set[String] =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+        .map(_.split(",").toSet).getOrElse(Set.empty)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        if (tags(e)(tag)) tagged += e.jobId
+        if (tags(e)(fenceTag)) fenceJobs += e.jobId
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+        if (fenceJobs(e.jobId)) fenced.countDown()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+      sc.addJobTag(fenceTag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(fenceTag)
+      assert(fenced.await(30, TimeUnit.SECONDS), "listener bus never delivered the fence job")
+      listener.synchronized(tagged.size)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("dedupGroups on the fixture runs the loop-free job count") {
+    Dedup.dedupGroups(spark, sf).collect() // warm: codegen, file listing
+    val jobs = jobsTagged("cc-job-count")(Dedup.dedupGroups(spark, sf).collect())
+    assert(jobs <= LoopFreeJobs, s"dedupGroups ran $jobs Spark jobs; the loop-free plan runs $LoopFreeJobs")
+  }
+}

@@ -438,4 +438,19 @@ class CommitLogRelationSpec extends SparkSpec {
     load(t).createOrReplaceTempView("clr_roundtrip")
     assert(spark.sql("SELECT count(*) FROM clr_roundtrip").as[Long].head() === 10L)
   }
+
+  test("both batch relations print the table path and version, never an identity hash") {
+    val t = indexedTable()
+    CommitLog.append(spark, t, Seq((500L, "x")).toDF("k", "s"))
+    def relation(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.analyzed.collectFirst {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation.toString
+      }.get
+    val table = relation(load(t))
+    val feed = relation(spark.read.format("graft-changefeed").option("table", t)
+      .option("startingVersion", "0").load())
+    assert(table === s"CommitLogRelation($t, v1)")
+    assert(feed === s"ChangeFeedRelation($t, versions (0, 1])")
+    Seq(table, feed).foreach(s => assert(!s.contains("@"), s))
+  }
 }

@@ -59,4 +59,33 @@ class DevSpec extends SparkSpec {
     assert(plan.startsWith("== Physical Plan =="), plan.take(200))
     assert(plan.contains("lineitem"), "the scan node names the fixture table")
   }
+
+  test("stacks skip threads parked in a native poll or wait, and only those") {
+    def native(cls: String, m: String) = new StackTraceElement(cls, m, null, -2)
+    def java(cls: String, m: String) = new StackTraceElement(cls, m, "X.java", 10)
+    val loop = java("io.netty.channel.epoll.EpollEventLoop", "run")
+    assert(Dev.parkedInNative(Array(native("io.netty.channel.epoll.Native", "epollWait"), loop)))
+    assert(Dev.parkedInNative(Array(native("sun.nio.ch.EPoll", "wait"))))
+    assert(Dev.parkedInNative(Array(native("sun.nio.ch.Net", "poll"))))
+    assert(Dev.parkedInNative(Array(native("sun.nio.ch.Net", "accept"))))
+    // native frames that move data, and Java frames named like waits, are work
+    assert(!Dev.parkedInNative(Array(native("java.io.FileInputStream", "readBytes"))))
+    assert(!Dev.parkedInNative(Array(java("graft.Dispatch", "awaitSlot"))))
+    // a parked frame below the top does not make the thread idle
+    assert(!Dev.parkedInNative(Array(
+      java("org.apache.spark.sql.execution.SparkPlan", "execute"),
+      native("sun.nio.ch.EPoll", "wait"))))
+    assert(!Dev.parkedInNative(Array.empty))
+  }
+
+  test("plandoc masks the random names of temporary table directories") {
+    val tmp = System.getProperty("java.io.tmpdir").stripSuffix("/")
+    val plan = s"+- Scan CommitLogRelation($tmp/occ_sql8231904, v2)  (1)\n" +
+      s"+- Scan ChangeFeedRelation($tmp/cdf_src77/x, versions (-1, 3])  (1)\n" +
+      "+- Scan CommitLogRelation(/data/occ_sql8231904, v2)  (1)"
+    assert(Dev.stableTempPaths(plan) ===
+      "+- Scan CommitLogRelation(<tmp>/occ_sql*, v2)  (1)\n" +
+      "+- Scan ChangeFeedRelation(<tmp>/cdf_src*/x, versions (-1, 3])  (1)\n" +
+      "+- Scan CommitLogRelation(/data/occ_sql8231904, v2)  (1)")
+  }
 }
