@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.collection.mutable
 
 /** Dev tool (not part of the driver contract): one session, one
@@ -15,9 +18,9 @@ import scala.collection.mutable
   *     interleaved rounds, so a host stall hits every query alike. Prints
   *     one JSON line with each query's samples, min and median.
   *   - `jobs q...` — one warm run per query under a `SparkListener`;
-  *     prints every Spark job with its wall time, stages, tasks, executor
-  *     CPU, shuffle bytes and input records, and how much of the query's
-  *     wall time the jobs cover.
+  *     prints every Spark job with its wall time, SQL execution and its
+  *     root plan node, stages, tasks, executor CPU, shuffle bytes and
+  *     input records, and how much of the query's wall time jobs cover.
   *   - `stacks q...` — samples every runnable thread's stack at ~5 ms
   *     during one warm run (threads parked in a native poll or wait are
   *     skipped) and prints the most frequent (thread group, first
@@ -154,19 +157,56 @@ object Dev {
     }
   }
 
-  private final case class JobRec(id: Int, t0: Long, var t1: Long = 0L,
+  private def prop(e: SparkListenerJobStart, key: String): Option[String] =
+    Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+
+  /** Returns once the listener bus has delivered every event posted before
+    * the call: a fence job runs under a fresh local property, and the bus
+    * delivers its end after every earlier event. False if not seen in 30 s. */
+  private[graft] def drainListenerBus(sc: SparkContext): Boolean = {
+    val fence = System.nanoTime.toString
+    @volatile var fenceJob = -1
+    val fenced = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (prop(e, "graft.fence").contains(fence)) fenceJob = e.jobId
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == fenceJob) fenced.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.fence", fence)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.fence", null)
+      fenced.await(30, TimeUnit.SECONDS)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private final case class JobRec(id: Int, t0: Long, exec: Option[String], var t1: Long = 0L,
                                   var stages: Int = 0, var tasks: Int = 0,
                                   var cpuNs: Long = 0L, var shufR: Long = 0L,
-                                  var shufW: Long = 0L, var recs: Long = 0L,
-                                  var names: List[String] = Nil)
+                                  var shufW: Long = 0L, var recs: Long = 0L)
 
   private def jobs(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    val sc = spark.sparkContext
     val jobs = mutable.LinkedHashMap.empty[Int, JobRec]
     val stageToJob = mutable.HashMap.empty[Int, Int]
+    val roots = mutable.HashMap.empty[String, String]
+    // only the profiled run's jobs carry "graft.dev.jobs": not the warmup's or the fence's
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        jobs(e.jobId) = JobRec(e.jobId, e.time)
-        e.stageIds.foreach(s => stageToJob(s) = e.jobId)
+        if (prop(e, "graft.dev.jobs").isDefined) {
+          jobs(e.jobId) = JobRec(e.jobId, e.time, prop(e, "spark.sql.execution.id"))
+          e.stageIds.foreach(s => stageToJob(s) = e.jobId)
+        }
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => jobs.synchronized {
+          // the execution's root plan node; under AQE, the node the wrapper wraps
+          val p = x.sparkPlanInfo
+          val root = if (p.nodeName == "AdaptiveSparkPlan") p.children.headOption else None
+          roots(x.executionId.toString) = root.getOrElse(p).nodeName
+        }
+        case _ =>
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
         jobs.get(e.jobId).foreach(_.t1 = e.time)
@@ -176,7 +216,6 @@ object Dev {
         stageToJob.get(si.stageId).flatMap(jobs.get).foreach { j =>
           j.stages += 1
           j.tasks += si.numTasks
-          j.names = si.name.take(70) :: j.names
         }
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = jobs.synchronized {
@@ -191,26 +230,28 @@ object Dev {
         }
       }
     }
-    spark.sparkContext.addSparkListener(listener)
+    sc.addSparkListener(listener)
     try resolve(spark, sfDir, names).foreach { case (n, q) =>
       q().count() // warmup (codegen+JIT), not profiled
       spark.catalog.clearCache()
       jobs.synchronized { jobs.clear(); stageToJob.clear() }
-      val wall = seconds(q().count())
-      Thread.sleep(300) // let listener drain
+      sc.setLocalProperty("graft.dev.jobs", n)
+      val wall = try seconds(q().count()) finally sc.setLocalProperty("graft.dev.jobs", null)
+      if (!drainListenerBus(sc)) System.err.println(s"[dev] listener bus not drained; $n may be incomplete")
       println(f"\n=== $n  wall=$wall%.3f s  jobs=${jobs.size} ===")
       var covered = 0L
       jobs.synchronized {
         jobs.values.foreach { j =>
           val w = (j.t1 - j.t0) / 1e3
           covered += (j.t1 - j.t0)
-          println(f"  job ${j.id}%3d  ${w}%7.3f s  stages=${j.stages}%2d tasks=${j.tasks}%4d " +
+          val exec = j.exec.fold("-")(id => s"$id ${roots.getOrElse(id, "?")}")
+          println(f"  job ${j.id}%3d  ${w}%7.3f s  exec=$exec%-24s stages=${j.stages}%2d tasks=${j.tasks}%4d " +
             f"cpu=${j.cpuNs / 1e9}%7.2f s  shufR=${j.shufR / 1024}%8d KB shufW=${j.shufW / 1024}%8d KB " +
-            f"in=${j.recs}%9d  ${j.names.mkString(" | ").take(90)}")
+            f"in=${j.recs}%9d")
         }
       }
       println(f"  job-covered wall: ${covered / 1e3}%.3f s of $wall%.3f s (gap = driver/planning/IO)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** The first Spark/graft/IO frame from the top of a stack. */

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * trained coarse quantizer and the corpus assignments as transactional
   * tables and serves searches from them, maintaining assignments
   * incrementally as new embeddings arrive. All pieces existed
-  * ([[Codebooks]] trains once, [[graft.streaming.AssignStream]] assigns
-  * online, the commit log stores); this object is their composition.
+  * ([[Codebooks]] trains once, the nearest-centroid argmin assigns, the
+  * commit log stores); this object is their composition.
   *
   * Layout under an index root — three commit-log tables:
   *   - `codebook`    — (c_label, s, cl): the trained coarse quantizer,

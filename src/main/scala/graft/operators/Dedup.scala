@@ -462,40 +462,6 @@ object Dedup {
                  maxBucket: Int = 50): DataFrame =
     minhashLshFrom(Tables.documents(spark, dir), maxBucket)
 
-  /** The signature stage, reusable by the batch one-shot and the
-    * streaming incremental form ([[graft.streaming.LshStream]]): 60
-    * minhash slots + set size per doc from exploded (doc_id, shingle)
-    * rows. See the family derivation comment in [[minhashLshFrom]]. */
-  private[graft] def minhashSignatures(sh: DataFrame): DataFrame = {
-    val hashed = sh
-      .withColumn("h1", graft.functions.EngineHash.md5Bits60(col("shingle"), 1))
-      .withColumn("h2", graft.functions.EngineHash.md5Bits60(col("shingle"), 17))
-    import graft.functions.EngineHash.rot60
-    val minhashes = (0 until 60).map(s =>
-      min(rot60(col("h1"), (7 * s) % 60).bitwiseXOR(rot60(col("h2"), (13 * s) % 60)))
-        .as(s"m$s")) :+
-      count(lit(1)).as("set_n")
-    hashed.groupBy(col("doc_id")).agg(minhashes.head, minhashes.tail: _*)
-  }
-
-  /** The banding stage: 15 bands × 4 rows over a [[minhashSignatures]]
-    * frame. Band key = the four slots joined as a string (NOT a hash of
-    * them — the oracle twin must build the exact same buckets, and
-    * positive longs render identically in both engines). */
-  private[graft] def bandsOf(sig: DataFrame): DataFrame = {
-    val bandStructs = (0 until 15).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws(":", (0 until 4).map(r => col(s"m${b * 4 + r}").cast("string")): _*)
-          .as("band_key"))
-    }
-    sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
-  }
-
-  /** Shingle rows for the streaming form's candidate verification (the
-    * exact-Jaccard stage needs shingle sets for candidate docs only). */
-  private[graft] def shinglesOf(docs: DataFrame): DataFrame = shingleRows(docs)
-
   /** Corpus-parameterized body (the embNearDupFrom pattern) so the skew
     * spec can feed a degenerate boilerplate corpus through the REAL
     * pipeline. */
@@ -538,8 +504,26 @@ object Dedup {
     // the signature stage. Set size rides along in the same aggregation.
     // All arithmetic stays inside positive 60-bit longs, which is what
     // makes the DuckDB twin bit-identical.
-    val sigCached = minhashSignatures(sh).localCheckpoint(true)
-    val bands = bandsOf(sigCached)
+    import graft.functions.EngineHash.{md5Bits60, rot60}
+    val minhashes = (0 until 60).map(s =>
+      min(rot60(col("h1"), (7 * s) % 60).bitwiseXOR(rot60(col("h2"), (13 * s) % 60)))
+        .as(s"m$s")) :+
+      count(lit(1)).as("set_n")
+    val sigCached = sh
+      .withColumn("h1", md5Bits60(col("shingle"), 1))
+      .withColumn("h2", md5Bits60(col("shingle"), 17))
+      .groupBy(col("doc_id")).agg(minhashes.head, minhashes.tail: _*)
+      .localCheckpoint(true)
+    // 15 bands × 4 rows. Band key = the four slots joined as a string (NOT
+    // a hash of them — the oracle twin must build the exact same buckets,
+    // and positive longs render identically in both engines).
+    val bandStructs = (0 until 15).map { b =>
+      struct(lit(b).as("band"),
+        concat_ws(":", (0 until 4).map(r => col(s"m${b * 4 + r}").cast("string")): _*)
+          .as("band_key"))
+    }
+    val bands = sigCached.select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
     // Bucket-size cap via aggregate + semi-join rather than a window
     // count: the cap exists to defend against DEGENERATE buckets, and a
     // window partition cannot be split — a million-row boilerplate bucket
@@ -562,15 +546,12 @@ object Dedup {
     // Exact verification on candidates only: shared-shingle counts via two
     // equi-joins (the same inverted-index shape as ngramJaccard); set
     // sizes come from the cached signature table, not another scan.
-    // Candidate-id semi-join pruning of sh (the LshStream candSh shape)
-    // was TRIED here and measured SLOWER at sf1 (45 s vs 31 s): in the
-    // one-shot form `cand` is lazy, so deriving candIds re-runs the band
-    // self-join, and the unbroadcast semi adds a third corpus-sized
-    // shuffle. The streaming form keeps the pruning because there `cand`
-    // is batch-sized and the corpus store is read selectively; here the
-    // production-scale equivalent is materializing `cand` first — which
-    // is exactly what a 100 TB run does by writing candidates out before
-    // verification.
+    // Candidate-id semi-join pruning of sh was TRIED here and measured
+    // SLOWER at sf1 (45 s vs 31 s): `cand` is lazy, so deriving candIds
+    // re-runs the band self-join, and the unbroadcast semi adds a third
+    // corpus-sized shuffle. The production-scale equivalent is
+    // materializing `cand` first — which is exactly what a 100 TB run
+    // does by writing candidates out before verification.
     val sizes = sigCached.select(col("doc_id"), col("set_n"))
     val inter = cand
       .join(sh.select(col("doc_id").as("d1"), col("shingle")), "d1")
@@ -1237,7 +1218,7 @@ object Dedup {
     * every 10-token window: ~10× the bytes hashed, measured 20.7 s →
     * this form at sf1). The shuffle rows shrink to (id, pos, int64) —
     * fixed 8-byte keys instead of 32-char digests. Trade (documented,
-    * [[minhashSignatures]]' caveat applies): a 60-bit linear family can
+    * [[minhashLshFrom]]'s caveat applies): a 60-bit linear family can
     * collide where full-text md5 effectively cannot — accidental
     * collisions are birthday-negligible (50 M windows ≪ 2^30·√2^60),
     * but adversarially constructible; a pipeline scrubbing hostile input
@@ -1301,9 +1282,9 @@ object Dedup {
   }
 
   /** Interval-union merge of flagged (doc_id, pos) windows into maximal
-    * disjoint spans — shared by the one-shot form above and the
-    * streaming form ([[graft.streaming.SpanStream]]), so the two cannot
-    * disagree about what a "span" is. */
+    * disjoint spans — shared by [[dupSpanRows]] and
+    * [[substringNoncanonical]], so the two cannot disagree about what a
+    * "span" is. */
   private[graft] def mergeSpans(flagged: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")

@@ -236,12 +236,9 @@ object EventAnalytics {
     * partitioning and the sort. Output is change-points-sized, not
     * events-sized. */
   /** SCD-2 core over an arbitrary (user_id, event_type, ts_ms, event_id)
-    * frame — shared by the registered batch query and the streaming
-    * merge sink ([[graft.streaming.Scd2Merge]]), which additionally
-    * keeps the change event_id so retroactive merges re-order ties
-    * exactly like the batch twin. */
+    * frame — shared by the registered batch query and [[scd2PitJoin]]'s
+    * dimension. */
   private[graft] def scd2From(events: DataFrame,
-                              keepEventId: Boolean = false,
                               ordered: Boolean = true): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts_ms"), col("event_id"))
     val base = events
@@ -254,11 +251,9 @@ object EventAnalytics {
       // output ordering (and the spec's interval chaining) ambiguous
       .withColumn("version", row_number().over(w))
       .withColumn("valid_to", lead(col("ts_ms"), 1).over(w))
-    val cols = Seq(col("user_id"), col("version"), col("event_type").as("status"),
+    val out = base.select(col("user_id"), col("version"), col("event_type").as("status"),
       col("ts_ms").as("valid_from"), col("valid_to"),
-      col("valid_to").isNull.as("is_current")) ++
-      (if (keepEventId) Seq(col("event_id").as("change_eid")) else Nil)
-    val out = base.select(cols: _*)
+      col("valid_to").isNull.as("is_current"))
     // the ORDER BY is the scd2_status QUERY's output contract; internal
     // consumers ([[scd2PitJoin]]) skip it — a sort the next operator
     // immediately destroys is a wasted range exchange

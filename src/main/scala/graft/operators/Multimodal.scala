@@ -433,8 +433,8 @@ object Multimodal {
     * quadratic work confined to same-chunk buckets, far-pair candidates
     * drop before the distinct shuffle. */
   /** The 4×15-bit band rows of a fingerprint frame — shared by the
-    * one-shot query and [[graft.streaming.PhashStream]], so online and
-    * offline candidates are provably the same banding. */
+    * BMP, PNG, JPEG, color-JPEG and WAV near-dup queries, so every
+    * modality's candidates are provably the same banding. */
   private[graft] def ahashChunks(sig: DataFrame): DataFrame =
     sig.select(col("doc_id"), col("ahash"), explode(expr(
       "transform(sequence(0, 3), c -> named_struct('chunk', c, 'ck', (ahash >> (c * 15)) & 32767))"))

@@ -209,26 +209,10 @@ object Similarity {
     * the oracle's list fold, so distances are bit-identical and the
     * argmin is stable across engines, while the E-step scan stays inside
     * whole-stage codegen. */
-  def kmeansAssign(spark: SparkSession, dir: String): DataFrame =
-    assignFrom(Tables.embeddings(spark, dir), centroidTable(spark, dir))
-      .orderBy(col("vec_id"))
-
-  /** The label-mean centroid table as one (c_label, cl) row per cluster —
-    * the broadcast side of every assignment. */
-  private[graft] def centroidTable(spark: SparkSession, dir: String): DataFrame =
-    embCentroids(spark, dir)
-      .groupBy(col("label").as("c_label"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, centroid))), x -> x.centroid)")
-        .as("cl"))
-
-  /** Nearest-centroid assignment of an arbitrary embedding frame —
-    * shared by the one-shot query above and the streaming serving form
-    * ([[graft.streaming.AssignStream]]), so online and offline
-    * assignments cannot disagree. */
-  private[graft] def assignFrom(emb: DataFrame, cent: DataFrame): DataFrame = {
+  def kmeansAssign(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("vec_id").orderBy("d", "c_label")
-    emb
-      .crossJoin(broadcast(cent))
+    Tables.embeddings(spark, dir)
+      .crossJoin(broadcast(centroidTable(spark, dir)))
       // codegen'd native expression — the higher-order
       // aggregate(zip_with(...)) form of this ran interpreted (the
       // measured-17x trap); arithmetic is bit-identical (left-assoc
@@ -240,7 +224,16 @@ object Similarity {
       .select(col("vec_id"), col("label").as("orig_label"),
         col("c_label").cast("int").as("assigned_label"),
         (col("label") === col("c_label")).as("is_same"))
+      .orderBy(col("vec_id"))
   }
+
+  /** The label-mean centroid table as one (c_label, cl) row per cluster —
+    * the broadcast side of every assignment. */
+  private[graft] def centroidTable(spark: SparkSession, dir: String): DataFrame =
+    embCentroids(spark, dir)
+      .groupBy(col("label").as("c_label"))
+      .agg(expr("transform(array_sort(collect_list(struct(dim, centroid))), x -> x.centroid)")
+        .as("cl"))
 
   // fixture tables must be referenced unaliased (Verify's read_parquet
   // inliner appends its own alias) — `emb` re-aliases through a CTE.
@@ -303,14 +296,9 @@ object Similarity {
     semDedupFrom(Tables.embeddings(spark, dir),
       centroidTable(spark, dir), tau, maxCell)
 
-  /** Core of [[semDedup]] over any (vec_id, embedding) frame and
-    * centroid table — split out so the keep-rule spec can plant an
-    * exact near-dup pair with known centroid geometry. */
-  /** SemDeDup E-step, shared by the one-shot query and the streaming
-    * form ([[graft.streaming.SemDedupStream]]) so online and offline
-    * assignments cannot disagree: nearest-centroid assignment plus the
-    * centroid-cosine (algebraic identity over the shared distance
-    * subterms) and the 8-dim sign-bucket code —
+  /** SemDeDup E-step of [[semDedupFrom]]: nearest-centroid assignment
+    * plus the centroid-cosine (algebraic identity over the shared
+    * distance subterms) and the 8-dim sign-bucket code —
     * (vec_id, embedding, norm, cluster, c_sim, sb). */
   private[graft] def semAssign(embs: DataFrame, centroids: DataFrame): DataFrame = {
     val cent = centroids
@@ -333,6 +321,9 @@ object Similarity {
         signCode.as("sb"))
   }
 
+  /** Core of [[semDedup]] over any (vec_id, embedding) frame and
+    * centroid table — split out so the keep-rule spec can plant an
+    * exact near-dup pair with known centroid geometry. */
   private[graft] def semDedupFrom(embs: DataFrame, centroids: DataFrame,
                                   tau: Double, maxCell: Int): DataFrame = {
     val assigned = semAssign(embs, centroids)

@@ -510,11 +510,6 @@ object CommitLog {
   private def operationOf(actions: Seq[Action]): Option[String] =
     actions.collectFirst { case a if a.op == "info" => a.path }
 
-  /** Commit kinds whose remove-carrying commits rewrite rows that ALREADY
-    * flowed — the change feeds skip them. Everything else that removes
-    * files changes row content. */
-  private val ReorgOps = Set("compact")
-
   /** Mutation kinds that change row content — under a remove-carrying
     * commit (copy-on-write) or a dv-carrying one (merge-on-read); without
     * change files the row-level feed cannot represent them, so

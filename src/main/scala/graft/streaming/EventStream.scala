@@ -92,17 +92,6 @@ object EventStream {
         |GROUP BY 1, 2
         |ORDER BY start_ms, event_type""".stripMargin
 
-  // --- session windows (native, streaming-capable) ---------------------------
-  /** Gap-based session windows via the native `session_window` function —
-    * the streaming-capable form of [[sessionize]] (state-store-backed under
-    * `writeStream`; in batch it merges overlapping per-event windows).
-    * Cross-validated against the window-function sessionize in specs. */
-  def sessionWindowCounts(eventsWithTime: DataFrame, gap: String = "30 minutes"): DataFrame =
-    eventsWithTime
-      .withWatermark("event_time", "10 minutes")
-      .groupBy(col("user_id"), session_window(col("event_time"), gap))
-      .agg(count(lit(1)).as("n_events"))
-
   // --- batch sessionization (gap-based, window-function form) --------------
   /** Sessionize each user's stream with a 30-minute inactivity gap: a new
     * session starts where the gap from the previous event exceeds the
@@ -215,8 +204,8 @@ object EventStream {
     * relation, so there is no watermark and no state store to bound; the
     * dimension broadcasts when it fits and degrades to a shuffle join
     * when it doesn't. Re-reading the dim per trigger (a `spark.read` in
-    * a foreachBatch) picks up Scd2Merge's latest swap — that composition
-    * is the serving loop. */
+    * a foreachBatch) picks up the dimension's latest rewrite — that
+    * composition is the serving loop. */
   def pitEnrichStream(obs: DataFrame, dim: DataFrame): DataFrame =
     obs.join(dim,
       obs("user_id") === dim("user_id") &&

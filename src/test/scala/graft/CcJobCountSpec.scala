@@ -1,9 +1,7 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-
 import graft.operators.Dedup
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import scala.collection.mutable
 
@@ -20,24 +18,16 @@ class CcJobCountSpec extends SparkSpec {
     * the loop-free plan runs 9 jobs, the label-propagation loop ran 48. */
   private val LoopFreeJobs = 9
 
-  /** Jobs started under `tag` while `body` runs. A fence job under a
-    * second tag runs afterwards; the listener bus delivers events in
-    * order, so once the fence's end is seen every earlier event is. */
+  /** Jobs started under `tag` while `body` runs, counted once the
+    * listener bus has delivered every event `body` posted. */
   private def jobsTagged(tag: String)(body: => Unit): Int = {
-    val fenceTag = tag + "-fence"
     val tagged = mutable.Set.empty[Int]
-    val fenceJobs = mutable.Set.empty[Int]
-    val fenced = new CountDownLatch(1)
     def tags(e: SparkListenerJobStart): Set[String] =
       Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
         .map(_.split(",").toSet).getOrElse(Set.empty)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
         if (tags(e)(tag)) tagged += e.jobId
-        if (tags(e)(fenceTag)) fenceJobs += e.jobId
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-        if (fenceJobs(e.jobId)) fenced.countDown()
       }
     }
     val sc = spark.sparkContext
@@ -45,9 +35,7 @@ class CcJobCountSpec extends SparkSpec {
     try {
       sc.addJobTag(tag)
       try body finally sc.removeJobTag(tag)
-      sc.addJobTag(fenceTag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(fenceTag)
-      assert(fenced.await(30, TimeUnit.SECONDS), "listener bus never delivered the fence job")
+      assert(Dev.drainListenerBus(sc), "listener bus never delivered the fence job")
       listener.synchronized(tagged.size)
     } finally sc.removeSparkListener(listener)
   }

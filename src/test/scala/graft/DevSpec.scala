@@ -3,8 +3,8 @@ package graft
 import java.nio.file.Files
 
 /** `graft.Dev`: argument parsing is pure and rejects malformed input with
-  * the usage text before any session starts; `time` and `plans` run on a
-  * caller-owned session. */
+  * the usage text before any session starts; `time`, `jobs` and `plans`
+  * run on a caller-owned session. */
 class DevSpec extends SparkSpec {
 
   private def rejected(args: String*): String = {
@@ -58,6 +58,17 @@ class DevSpec extends SparkSpec {
     val plan = new String(Files.readAllBytes(dir.resolve("q1_agg_t.txt")), "UTF-8")
     assert(plan.startsWith("== Physical Plan =="), plan.take(200))
     assert(plan.contains("lineitem"), "the scan node names the fixture table")
+  }
+
+  test("jobs names each job's SQL execution and its root plan node") {
+    val out = new java.io.ByteArrayOutputStream
+    Console.withOut(out) {
+      Dev.run(spark, sf, Dev.parse(Seq("jobs", "q1_agg")))
+    }
+    val text = out.toString("UTF-8")
+    val rows = text.linesIterator.filter(_.startsWith("  job ")).toSeq
+    assert(text.contains("=== q1_agg") && rows.nonEmpty, text)
+    rows.foreach(r => assert("""exec=\d+ [A-Za-z]\w*""".r.findFirstIn(r).nonEmpty, r))
   }
 
   test("stacks skip threads parked in a native poll or wait, and only those") {

@@ -141,210 +141,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming MinHash-LSH equals the one-shot batch run across three micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.LshStream
-    // fixture corpus + two planted near-dups of doc 0, all landing in
-    // DIFFERENT batches than their partner — the cross-batch discovery path
-    val base = Tables.documents(spark, sf).select("doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val d0 = base.find(_._1 == base.map(_._1).min).get._2
-    val all = base ++ Seq((900001L, d0 + " tail"), (900002L, d0))
-    val batches = all.groupBy { case (id, _) => (id % 3).toInt }.toSeq.sortBy(_._1)
-    assert(batches.size == 3)
-
-    val stateDir = tmp("lsh-state"); val ck = tmp("lsh-ck")
-    val input = MemoryStream[(Long, String)]
-    val q = LshStream.minhashLshStream(
-      input.toDF().toDF("doc_id", "text"), stateDir, ck,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
-    try {
-      batches.foreach { case (_, docs) =>
-        input.addData(docs.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-
-    val streamed = LshStream.pairs(spark, stateDir)
-      .select("d1", "d2", "jaccard").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // the UNLIMITED batch pair set: the one-shot query's top-1000 LIMIT
-    // is a result-shape contract, not a semantic one — comparing against
-    // it would vacuously pass on any corpus under 1000 pairs and
-    // spuriously fail above
-    val oneShot = graft.operators.Dedup
-      .minhashLshFrom(all.toSeq.toDF("doc_id", "text"), topK = Int.MaxValue)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(streamed.nonEmpty, "planted near-dups must be found")
-    assert(streamed.exists { case (d1, d2, j) => d2 == 900002L && j == 1.0 },
-      "the cross-batch exact-dup pair must be discovered at arrival")
-    assert(streamed == oneShot)
-
-    // replay idempotence: re-processing an already-admitted batch (same
-    // batch id) overwrites its own partitions with identical content
-    LshStream.processBatch(spark, batches.head._2.toSeq.toDF("doc_id", "text"),
-      stateDir, batchId = 0L)
-    val replayed = LshStream.pairs(spark, stateDir).count()
-    assert(replayed == streamed.size.toLong)
-
-    // crash-window convergence: simulate a crash that landed SOME of
-    // batch 0's four table writes but not others (here: sigs and corpus
-    // lost) — the replay must rebuild them and leave the pair set intact
-    import scala.reflect.io.Directory
-    val b0Ids = batches.head._2.map(_._1).toSet
-    new Directory(new java.io.File(s"$stateDir/sigs/batch=0")).deleteRecursively()
-    new Directory(new java.io.File(s"$stateDir/corpus/batch=0")).deleteRecursively()
-    LshStream.processBatch(spark, batches.head._2.toSeq.toDF("doc_id", "text"),
-      stateDir, batchId = 0L)
-    assert(LshStream.pairs(spark, stateDir).count() == streamed.size.toLong)
-    val sigsBack = spark.read.parquet(s"$stateDir/sigs").filter(col("batch") === 0)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(sigsBack.nonEmpty && sigsBack.subsetOf(b0Ids),
-      "replay after a partial crash must rebuild the lost batch partitions")
-  }
-
-  test("streaming winnowing equals the one-shot batch run across three micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.WinnowStream
-    // fixture corpus + a planted copy of doc 0 with an 8-token shared run
-    // landing in a DIFFERENT batch — the cross-batch discovery path
-    val base = Tables.documents(spark, sf).select("doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val d0 = base.find(_._1 == base.map(_._1).min).get._2
-    val all = base ++ Seq((900001L, d0), (900002L, "zz " + d0))
-    val batches = all.groupBy { case (id, _) => (id % 3).toInt }.toSeq.sortBy(_._1)
-    assert(batches.size == 3)
-
-    val stateDir = tmp("winnow-state"); val ck = tmp("winnow-ck")
-    val input = MemoryStream[(Long, String)]
-    val q = WinnowStream.winnowStream(
-      input.toDF().toDF("doc_id", "text"), stateDir, ck,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
-    try {
-      batches.foreach { case (_, docs) =>
-        input.addData(docs.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-
-    val streamed = WinnowStream.pairs(spark, stateDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val oneShot = graft.operators.Dedup
-      .winnowPairsFrom(all.toSeq.toDF("doc_id", "text"), maxBucket = 50)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(streamed.nonEmpty, "planted near-dups must be found")
-    assert(streamed.exists { case (a, b, n) =>
-      Set(a, b).contains(900001L) && n >= 1L },
-      "the cross-batch copy must be discovered at arrival")
-    assert(streamed == oneShot,
-      "accumulated stream pairs must equal the one-shot batch run")
-
-    // replay idempotence + crash-window convergence: delete SOME of batch
-    // 0's store partitions (fps lost, seen kept), replay the batch — the
-    // stores are rebuilt and the pair set is unchanged
-    import scala.reflect.io.Directory
-    WinnowStream.processBatch(spark, batches.head._2.toSeq.toDF("doc_id", "text"),
-      stateDir, batchId = 0L)
-    assert(WinnowStream.pairs(spark, stateDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      == streamed)
-    new Directory(new java.io.File(s"$stateDir/fps/batch=0")).deleteRecursively()
-    WinnowStream.processBatch(spark, batches.head._2.toSeq.toDF("doc_id", "text"),
-      stateDir, batchId = 0L)
-    assert(WinnowStream.pairs(spark, stateDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      == streamed)
-    assert(spark.read.parquet(s"$stateDir/fps").filter(col("batch") === 0).count() > 0,
-      "replay must rebuild the lost fingerprint partition")
-  }
-
-  test("streaming centroid assignment equals the one-shot kmeans_assign") {
-    import graft.streaming.AssignStream
-    import graft.operators.Similarity
-    val emb = Tables.embeddings(spark, sf)
-    val outDir = tmp("assign-out")
-    // two micro-batches split by vec_id parity, assigned at arrival
-    AssignStream.processBatch(spark, emb.filter(col("vec_id") % 2 === 0), sf, outDir, 0L)
-    AssignStream.processBatch(spark, emb.filter(col("vec_id") % 2 === 1), sf, outDir, 1L)
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getBoolean(3))).toSet
-    val streamed = key(AssignStream.assignments(spark, outDir))
-    val oneShot = key(Similarity.kmeansAssign(spark, sf))
-    assert(streamed.nonEmpty && streamed == oneShot,
-      "online and offline assignments must be identical")
-    // replay idempotence: same batch id overwrites identical rows
-    AssignStream.processBatch(spark, emb.filter(col("vec_id") % 2 === 0), sf, outDir, 0L)
-    assert(key(AssignStream.assignments(spark, outDir)) == oneShot)
-  }
-
-  test("streaming substring spans equal the one-shot run after EVERY micro-batch") {
-    import spark.implicits._
-    import graft.streaming.SpanStream
-    import graft.operators.Dedup
-    def run(name: String, n: Int) = (0 until n).map(i => s"R_${name}_$i").mkString(" ")
-    def uniq(tag: String, n: Int) = (0 until n).map(i => s"u_${tag}_$i").mkString(" ")
-    // doc 1 carries TWO plantable regions; doc 2 duplicates S in batch 0,
-    // doc 3 duplicates T in batch 1 — so doc 1's span set GROWS after it
-    // arrived (the upsert path), and doc 4 is a sub-window doc (no-op
-    // windows but must still be admitted exactly once)
-    val d1 = s"${run("S", 12)} ${uniq("a", 5)} ${run("T", 12)}"
-    val d2 = s"${uniq("b", 7)} ${run("S", 12)}"
-    val d3 = s"${uniq("c", 3)} ${run("T", 12)}"
-    val d4 = "tiny doc"
-    val batches: Seq[Seq[(Long, String)]] =
-      Seq(Seq(1L -> d1, 2L -> d2), Seq(3L -> d3), Seq(4L -> d4))
-    val stateDir = tmp("span-state")
-    var seen = Seq.empty[(Long, String)]
-    batches.zipWithIndex.foreach { case (b, i) =>
-      seen ++= b
-      SpanStream.processBatch(spark, b.toDF("doc_id", "text"), stateDir, i.toLong)
-      val streamed = SpanStream.spans(spark, stateDir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      val oneShot = Dedup.dupSpanRows(seen.toDF("doc_id", "text")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      assert(streamed == oneShot, s"after batch $i: $streamed vs one-shot $oneShot")
-    }
-    // the grown span set is the interesting row: doc 1 now carries BOTH
-    // planted regions as separate spans
-    val doc1 = SpanStream.spans(spark, stateDir).filter(col("doc_id") === 1)
-      .collect().map(r => (r.getLong(1), r.getLong(2)))
-    assert(doc1.toSet == Set((0L, 11L), (17L, 28L)), doc1.mkString(","))
-
-    // replay idempotence + crash-window convergence (the LshStream
-    // machinery, re-proven on this stream's three tables)
-    val before = SpanStream.spans(spark, stateDir).count()
-    SpanStream.processBatch(spark, batches(1).toDF("doc_id", "text"), stateDir, 1L)
-    assert(SpanStream.spans(spark, stateDir).count() == before)
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(s"$stateDir/wins_hb/batch=1")).deleteRecursively()
-    new Directory(new java.io.File(s"$stateDir/wins_db/batch=1")).deleteRecursively()
-    new Directory(new java.io.File(s"$stateDir/spans/batch=1")).deleteRecursively()
-    SpanStream.processBatch(spark, batches(1).toDF("doc_id", "text"), stateDir, 1L)
-    val afterReplay = SpanStream.spans(spark, stateDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val oneShotAll = Dedup.dupSpanRows(seen.toDF("doc_id", "text")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(afterReplay == oneShotAll,
-      "replay after losing two of three batch partitions must converge")
-  }
-
-  test("streaming LSH bucket cap is PREFIX semantics: pairs found while small persist") {
-    import spark.implicits._
-    import graft.streaming.LshStream
-    val text = "alpha beta gamma delta epsilon zeta eta theta"
-    val stateDir = tmp("lsh-cap")
-    // cap 2: the {a,b} bucket pair is found; c overflows the bucket later
-    LshStream.processBatch(spark, Seq((1L, text)).toDF("doc_id", "text"), stateDir, batchId = 0L, maxBucket = 2)
-    LshStream.processBatch(spark, Seq((2L, text)).toDF("doc_id", "text"), stateDir, batchId = 1L, maxBucket = 2)
-    LshStream.processBatch(spark, Seq((3L, text)).toDF("doc_id", "text"), stateDir, batchId = 2L, maxBucket = 2)
-    val got = LshStream.pairs(spark, stateDir).select("d1", "d2").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the one-shot form would drop the (now size-3) bucket entirely; the
-    // stream keeps the pair it found while the bucket was within cap —
-    // and emits nothing new once over
-    assert(got == Set((1L, 2L)))
-  }
-
   test("streaming ingest: file lands once, restart does not reprocess (T2)") {
     val in = tmp("captures"); val out = tmp("fact"); val ck = tmp("ckpt")
     val rec =
@@ -599,80 +395,6 @@ class StreamingSpec extends SparkSpec {
     assert(again.isEmpty)
   }
 
-  test("scd2 streaming merge: in-order batches reproduce the batch twin; late event splits its interval") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.Scd2Merge
-    import graft.streaming.Scd2Merge.StatusEv
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val tableDir = tmp("scd2m") + "/dim"
-    val ck = tmp("scd2ck")
-    val input = MemoryStream[StatusEv]
-    val q = Scd2Merge.scd2MergeSink(input.toDS(), tableDir, ck,
-      org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    def drain(): Unit = { val qq = Scd2Merge.scd2MergeSink(input.toDS(), tableDir, ck,
-      org.apache.spark.sql.streaming.Trigger.AvailableNow()); qq.awaitTermination() }
-    q.awaitTermination()
-    // batch 1 (in order): u1 A@100 -> C@300; u2 A@100
-    input.addData(StatusEv(1, "A", 100, 1), StatusEv(1, "C", 300, 3),
-      StatusEv(2, "A", 100, 10))
-    drain()
-    // batch 2: u1's LATE B@200 arrives -> must retroactively SPLIT [100,300)
-    input.addData(StatusEv(1, "B", 200, 2))
-    drain()
-    val table = spark.read.parquet(tableDir)
-      .select("user_id", "version", "status", "valid_from", "valid_to", "is_current")
-    // equivalence: the table equals the batch SCD-2 core over ALL events
-    val all = Seq((1L, "A", 100L, 1L), (1L, "C", 300L, 3L), (2L, "A", 100L, 10L),
-      (1L, "B", 200L, 2L)).toDF("user_id", "event_type", "ts_ms", "event_id")
-    val batchTwin = graft.operators.EventAnalytics.scd2From(all)
-    assert(table.orderBy("user_id", "version").collect().toSeq ==
-      batchTwin.collect().toSeq)
-    // and the late event really split: u1 is A[100,200) B[200,300) C[300,_)
-    val u1 = table.filter($"user_id" === 1).orderBy("version")
-      .select("status", "valid_from", "valid_to").collect()
-      .map(r => (r.getString(0), r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
-    assert(u1.toSeq == Seq(("A", 100L, 200L), ("B", 200L, 300L), ("C", 300L, -1L)))
-  }
-
-  test("scd2 streaming merge: change-compressed history is the documented replay limit") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.Scd2Merge
-    import graft.streaming.Scd2Merge.StatusEv
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val tableDir = tmp("scd2c") + "/dim"
-    val ck = tmp("scd2cck")
-    val input = MemoryStream[StatusEv]
-    def drain(): Unit = { val qq = Scd2Merge.scd2MergeSink(input.toDS(), tableDir, ck,
-      org.apache.spark.sql.streaming.Trigger.AvailableNow()); qq.awaitTermination() }
-    // batch 1: A@100 then duplicate A@200 — compression records only A@100
-    input.addData(StatusEv(1, "A", 100, 1), StatusEv(1, "A", 200, 3))
-    drain()
-    // batch 2: late B@150 lands between the pair. Full-history replay
-    // would yield A,B,A; the merge sees only the COMPRESSED history, so
-    // the table ends A[100,150) B[150,_) — the pinned approximation
-    input.addData(StatusEv(1, "B", 150, 2))
-    drain()
-    val got = spark.read.parquet(tableDir).orderBy("version")
-      .select("status", "valid_from").collect().map(r => (r.getString(0), r.getLong(1)))
-    assert(got.toSeq == Seq(("A", 100L), ("B", 150L)))
-  }
-
-  test("scd2 streaming merge: stale backup dir makes the merge refuse, table intact") {
-    import spark.implicits._
-    val base = tmp("scd2s"); val tableDir = base + "/dim"
-    val batch1 = Seq((1L, "A", 100L, 1L)).toDF("user_id", "event_type", "ts_ms", "event_id")
-    graft.streaming.Scd2Merge.mergeBatch(batch1, tableDir)
-    // simulate an interrupted swap: the backup dir still exists
-    new java.io.File(base + "/dim_premerge").mkdirs()
-    val batch2 = Seq((1L, "B", 200L, 2L)).toDF("user_id", "event_type", "ts_ms", "event_id")
-    intercept[IllegalStateException] {
-      graft.streaming.Scd2Merge.mergeBatch(batch2, tableDir)
-    }
-    assert(spark.read.parquet(tableDir).count() == 1, "live table untouched on refusal")
-  }
-
   test("dispatch crash between CSV write and ledger append: at-least-once retry, no duplicate ledger rows") {
     import spark.implicits._
     val outDir = tmp("csvc")
@@ -813,86 +535,5 @@ class StreamingSpec extends SparkSpec {
     try q3.processAllAvailable() finally { q3.stop(); q3.awaitTermination() }
     assert(spark.read.parquet(corpus).select("doc_id").as[Long].collect()
       .sorted.toSeq === Seq(1L, 2L, 11L))
-  }
-
-  test("scd2 sink crash after table swap, before commit: replay yields no duplicate intervals") {
-    import spark.implicits._
-    val in = tmp("scin"); val table = tmp("sctab") + "/dim"; val ck = tmp("scck")
-    def evs = spark.readStream
-      .schema("user_id LONG, event_type STRING, ts_ms LONG, event_id LONG")
-      .json(in).as[graft.streaming.Scd2Merge.StatusEv]
-    def run(): Unit = {
-      val q = graft.streaming.Scd2Merge.scd2MergeSink(evs, table, ck,
-        Trigger.ProcessingTime("1 second"))
-      try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
-    }
-    Files.writeString(java.nio.file.Paths.get(s"$in/b1.json"),
-      """{"user_id":1,"event_type":"A","ts_ms":100,"event_id":1}
-        |{"user_id":2,"event_type":"A","ts_ms":150,"event_id":2}""".stripMargin)
-    run()
-    val snapshot = spark.read.parquet(table)
-      .select("user_id", "status", "valid_from", "valid_to")
-      .collect().map(_.toSeq).toSet
-    assert(snapshot.size === 2)
-    dropLatestCommit(ck)
-    // restart: the replayed batch re-merges its own events against the
-    // table they already produced — change compression collapses each
-    // replayed duplicate, so the swap rewrites an IDENTICAL table
-    run()
-    val replayed = spark.read.parquet(table)
-      .select("user_id", "status", "valid_from", "valid_to")
-      .collect().map(_.toSeq).toSet
-    assert(replayed === snapshot, "replayed merge changed the dimension")
-    val dupIntervals = spark.read.parquet(table)
-      .groupBy("user_id", "valid_from").count().filter(col("count") > 1).count()
-    assert(dupIntervals === 0L)
-    // and the recovered checkpoint still merges NEW changes correctly
-    Files.writeString(java.nio.file.Paths.get(s"$in/b2.json"),
-      """{"user_id":1,"event_type":"B","ts_ms":200,"event_id":3}""".stripMargin)
-    run()
-    val u1 = spark.read.parquet(table).filter(col("user_id") === 1)
-      .orderBy(col("valid_from"))
-      .select("status", "valid_from", "valid_to")
-      .collect().map(r => (r.getString(0), r.getLong(1), Option(r.get(2))))
-    assert(u1.toSeq === Seq(("A", 100L, Some(200L)), ("B", 200L, None)))
-  }
-
-  test("in-batch conflicting texts under one doc_id admit the md5-min text deterministically") {
-    import spark.implicits._
-    import graft.streaming.{LshStream, SpanStream}
-    // two DIFFERENT texts under the same doc_id in one batch — with
-    // first(), the admitted one depended on partition order; the
-    // min_by(text, md5(text)) contract makes it a pure content function
-    val tA = (0 until 15).map(i => s"alpha_$i").mkString(" ")
-    val tB = (0 until 15).map(i => s"beta_$i").mkString(" ")
-    def md5Hex(t: String) = java.security.MessageDigest.getInstance("MD5")
-      .digest(t.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val expected = Seq(tA, tB).minBy(md5Hex)
-    val orders = Seq(Seq(1L -> tA, 1L -> tB), Seq(1L -> tB, 1L -> tA))
-
-    orders.foreach { order =>
-      val st = tmp("lsh-det")
-      LshStream.processBatch(spark,
-        order.toDF("doc_id", "text").repartition(4), st, batchId = 0L)
-      val admitted = spark.read.parquet(s"$st/corpus")
-        .select("text").collect().map(_.getString(0)).toSeq
-      assert(admitted == Seq(expected),
-        s"LshStream admitted ${admitted.headOption} — not the md5-min text")
-    }
-
-    // SpanStream keeps fingerprints, not text: both arrival orders must
-    // land the IDENTICAL window rows — the md5-min text's
-    val winsPerOrder = orders.map { order =>
-      val st = tmp("span-det")
-      SpanStream.processBatch(spark,
-        order.toDF("doc_id", "text").repartition(4), st, batchId = 0L)
-      spark.read.parquet(s"$st/wins_hb").select("doc_id", "pos", "h").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    }
-    val expWins = graft.operators.Dedup
-      .slidingWindowRows(Seq(1L -> expected).toDF("doc_id", "text"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(winsPerOrder.head.nonEmpty && winsPerOrder.forall(_ == expWins),
-      "SpanStream window rows differ from the md5-min text's windows")
   }
 }
