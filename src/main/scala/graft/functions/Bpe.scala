@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.expr
 
 /** Subword ("BPE-ish") token counting — the tokenizer-faithful budget
   * counter the whitespace split can't provide (VERDICT r10 missing #1:

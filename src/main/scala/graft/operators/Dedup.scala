@@ -1227,7 +1227,6 @@ object Dedup {
     * codegen'd narrow scan beats persisting a corpus-token-sized
     * intermediate. */
   private[graft] def slidingWindowRows(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Column
     // posexplode + ten lead()s instead of a transform() lambda: higher-
     // order lambdas evaluate INTERPRETED per element (the minhashLsh
     // lesson — stack-sampled here too: BinaryArithmetic.eval inside

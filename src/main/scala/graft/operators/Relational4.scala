@@ -128,7 +128,7 @@ object Relational4 {
     * filtered slice only — at 100× the pair shuffle carries the '%rod'
     * fraction, not every pair. */
   private def pairCost(spark: SparkSession, dir: String,
-                       partFilter: Option[DataFrame] = None): DataFrame = {
+                       partFilter: Option[DataFrame]): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .select(col("l_partkey"), col("l_suppkey"),
         col("l_extendedprice"), col("l_quantity"))

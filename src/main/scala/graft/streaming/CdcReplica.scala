@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import graft.sources.CommitLog
+import graft.sources.{CommitLog, CommitLogQueries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import java.nio.file.Files
@@ -17,7 +17,10 @@ import java.nio.file.Files
   * (process.py:455-473 — a driver thread re-querying MySQL every 10 s)
   * with the lakehouse-native form: the commit log IS the queue, offsets
   * ARE commit versions, and the replica is itself a commit-log table a
-  * further consumer can tail.
+  * further consumer can tail. Set `cdc=true` on the replica
+  * ([[CommitLog.setTableProperty]]) and every apply records its own
+  * change files, so a second replica can follow this one through the
+  * row-level feed exactly as this one follows its source.
   *
   * Exactly-once, precisely: the engine's offset log makes batch windows
   * deterministic (commits are immutable, so a replayed window is
@@ -119,5 +122,5 @@ object CdcReplica {
   /** Same expected state as the batch twin `occ_apply_changes` — that is
     * the point: the streamed, paced, txn-marked loop must land exactly
     * where the batch loop lands. */
-  val occReplicaStreamSql: String = CommitLog.occApplyChangesSql
+  val occReplicaStreamSql: String = CommitLogQueries.occApplyChangesSql
 }

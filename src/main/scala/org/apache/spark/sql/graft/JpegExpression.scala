@@ -554,7 +554,7 @@ object JpegKernel {
     def nextBit(): Int = {
       if (n == 0) {
         if (pos >= b.length) fail()
-        var v = b(pos) & 0xFF
+        val v = b(pos) & 0xFF
         pos += 1
         if (v == 0xFF) {
           if (pos >= b.length || (b(pos) & 0xFF) != 0x00) fail()

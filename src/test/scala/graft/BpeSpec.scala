@@ -203,7 +203,6 @@ class BpeSpec extends SparkSpec {
 
   test("50k-entry real-format vocab: loads, counts, and stays a map-side projection") {
     import org.apache.spark.sql.graft.{BpeFunctions, BpeVocab}
-    import spark.implicits._
     // Generate 50,000 merge lines IN THE PUBLISHED FORMAT (pairs rendered
     // in the gpt2 byte alphabet), covering unit lengths 2..12 and all 256
     // byte values — the scale and shape of the real published table,

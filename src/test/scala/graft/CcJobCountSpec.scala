@@ -1,9 +1,6 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
-import scala.collection.mutable
 
 /** `dedupGroups` is job-scheduling bound at fixture and bench scale, so
   * its Spark job count is the regression metric. On one edge partition
@@ -12,33 +9,11 @@ import scala.collection.mutable
   * aggregation and shingle count, the edge count, and the final expansion
   * join. A loop (sizing, symmetric edges, label seeding, then at least
   * one multi-job round) costs several times as many. */
-class CcJobCountSpec extends SparkSpec {
+class CcJobCountSpec extends SparkSpec with JobCounting {
 
   /** Measured on the sf0.001 fixture at `local[4]`, 4 shuffle partitions:
     * the loop-free plan runs 9 jobs, the label-propagation loop ran 48. */
   private val LoopFreeJobs = 9
-
-  /** Jobs started under `tag` while `body` runs, counted once the
-    * listener bus has delivered every event `body` posted. */
-  private def jobsTagged(tag: String)(body: => Unit): Int = {
-    val tagged = mutable.Set.empty[Int]
-    def tags(e: SparkListenerJobStart): Set[String] =
-      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-        .map(_.split(",").toSet).getOrElse(Set.empty)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-        if (tags(e)(tag)) tagged += e.jobId
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.addJobTag(tag)
-      try body finally sc.removeJobTag(tag)
-      assert(Dev.drainListenerBus(sc), "listener bus never delivered the fence job")
-      listener.synchronized(tagged.size)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("dedupGroups on the fixture runs the loop-free job count") {
     Dedup.dedupGroups(spark, sf).collect() // warm: codegen, file listing

@@ -330,6 +330,42 @@ class ChangeFeedStreamSpec extends SparkSpec {
     assert(snap(replica) === Seq((3L, "c2"), (9L, "i2"), (10L, "j")))
   }
 
+  test("a replica with cdc on feeds a further replica, copy-on-write and merge-on-read") {
+    import graft.streaming.CdcReplica
+    def snap(t: String): Seq[(Long, String)] =
+      CommitLog.read(spark, t).select("k", "s").as[(Long, String)]
+        .collect().sortBy(_._1).toSeq
+    Seq(false, true).foreach { mergeOnRead =>
+      val Seq(src, mid, end, midCkpt, endCkpt) =
+        Seq("ch_src", "ch_mid", "ch_end", "ch_mid_ckpt", "ch_end_ckpt").map(freshDir)
+      CommitLog.append(spark, src, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s"))
+      CommitLog.setTableProperty(src, "cdc", "true")
+      // the middle replica records its own row-level feed
+      CommitLog.setTableProperty(mid, "cdc", "true")
+      def hop(from: String, to: String, ckpt: String, app: String): Unit = {
+        val q = CdcReplica.replicaStream(spark, from, to, Seq("k"), ckpt,
+          appId = app, mergeOnRead = mergeOnRead,
+          trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
+        try q.processAllAvailable() finally q.stop()
+      }
+      def follow(): Unit = {
+        hop(src, mid, midCkpt, "mid")
+        hop(mid, end, endCkpt, "end")
+      }
+      follow()
+      assert(snap(end) === snap(src), s"bootstrap must chain (mergeOnRead=$mergeOnRead)")
+      // every mutation type reaches the end replica through the middle
+      // one's apply commits: an update, an insert, and a retraction
+      CommitLog.mergeInto(spark, src, Seq((2L, "b2"), (9L, "i")).toDF("k", "s"), Seq("k"))
+      CommitLog.deleteWhere(spark, src, col("k") === 1L)
+      CommitLog.updateWhere(spark, src, col("k") === 3L, Map("s" -> lit("c2")))
+      follow()
+      assert(snap(end) === Seq((2L, "b2"), (3L, "c2"), (9L, "i")),
+        s"the end replica must converge (mergeOnRead=$mergeOnRead)")
+      assert(snap(mid) === snap(src))
+    }
+  }
+
   test("stream schema comes from the log, so a stream can start/restart over an empty live set") {
     val src = freshDir("cdf_empty")
     val ckpt = freshDir("cdf_empty_ckpt")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.CommitLog
+import graft.sources.{CommitLog, CommitLogQueries}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -704,44 +704,44 @@ class CommitLogSpec extends SparkSpec {
   }
 
   test("registered query forms: occ_append_snapshot and occ_time_travel at sf0.001") {
-    val a = CommitLog.occAppendSnapshot(spark, sf)
+    val a = CommitLogQueries.occAppendSnapshot(spark, sf)
     assert(a.count() === 2 * Tables.nation(spark, sf).count())
-    val tt = CommitLog.occTimeTravel(spark, sf)
+    val tt = CommitLogQueries.occTimeTravel(spark, sf)
     assert(tt.count() === Tables.nation(spark, sf).count())
-    val rw = CommitLog.occReadWhere(spark, sf)
+    val rw = CommitLogQueries.occReadWhere(spark, sf)
     val expect = Tables.lineitem(spark, sf)
       .where(col("l_orderkey").between(1000, 2000)).count()
     assert(rw.count() === expect && expect > 0)
-    val dw = CommitLog.occDeleteWhere(spark, sf)
+    val dw = CommitLogQueries.occDeleteWhere(spark, sf)
     val expectDel = Tables.orders(spark, sf)
       .where(!col("o_orderkey").between(1000, 3000)).count()
     assert(dw.count() === expectDel && expectDel > 0)
-    val se = CommitLog.occSchemaEvolve(spark, sf)
+    val se = CommitLogQueries.occSchemaEvolve(spark, sf)
     val n = Tables.nation(spark, sf).count()
     assert(se.count() === n + Tables.nation(spark, sf)
       .where(col("n_nationkey") < 5).count())
     assert(se.columns.contains("extra"))
-    val mu = CommitLog.occMergeUpsert(spark, sf)
+    val mu = CommitLogQueries.occMergeUpsert(spark, sf)
     val orders = Tables.orders(spark, sf)
     assert(mu.count() === orders.count() +
       orders.where(col("o_orderkey").between(1, 100)).count())
     assert(mu.where(col("o_orderkey") < 0).count() ===
       orders.where(col("o_orderkey").between(1, 100)).count())
-    val cf = CommitLog.occChangeFeed(spark, sf)
+    val cf = CommitLogQueries.occChangeFeed(spark, sf)
     assert(cf.count() === Tables.nation(spark, sf)
       .where(col("n_nationkey") < 5 || col("n_nationkey") >= 20).count())
-    val zr = CommitLog.occZorderRead(spark, sf)
+    val zr = CommitLogQueries.occZorderRead(spark, sf)
     val expectZ = Tables.orders(spark, sf)
       .where(col("o_custkey").between(100, 500) &&
         col("o_orderkey").between(0, 100000)).count()
     assert(zr.count() === expectZ && expectZ > 0)
-    val cdc = CommitLog.occCdcFeed(spark, sf)
+    val cdc = CommitLogQueries.occCdcFeed(spark, sf)
     val nRows = Tables.nation(spark, sf).count()
     val nLow = Tables.nation(spark, sf).where(col("n_nationkey") < 5).count()
     val nDel = Tables.nation(spark, sf)
       .where(col("n_nationkey") >= 20 && col("n_nationkey") < 100).count()
     assert(cdc.count() === nRows + 3 * nLow + nDel)
-    val uw = CommitLog.occUpdateWhere(spark, sf)
+    val uw = CommitLogQueries.occUpdateWhere(spark, sf)
     assert(uw.count() === Tables.orders(spark, sf).count())
     assert(uw.where(col("o_orderstatus") === "U").count() ===
       Tables.orders(spark, sf)
@@ -1150,19 +1150,19 @@ class CommitLogSpec extends SparkSpec {
   }
 
   test("registered query forms: occ_restore and occ_history at sf0.001") {
-    val r = CommitLog.occRestore(spark, sf)
+    val r = CommitLogQueries.occRestore(spark, sf)
     val nation = Tables.nation(spark, sf)
     assert(r.count() === nation.count())
     assert(r.where(col("n_nationkey") >= 1000).count() === 0L,
       "the extra post-delete append must be rolled back")
-    val h = CommitLog.occHistory(spark, sf)
+    val h = CommitLogQueries.occHistory(spark, sf)
       .as[(Long, String, Long, Long, Long)].collect().toSeq
     assert(h.map(_._2) ===
       Seq("append", "append", "delete", "compact", "property", "restore"))
     assert(h.map(r2 => (r2._3, r2._4, r2._5)) ===
       Seq((1L, 0L, 0L), (1L, 0L, 0L), (1L, 1L, 1L),
           (1L, 2L, 0L), (0L, 0L, 0L), (2L, 1L, 0L)))
-    val cc = CommitLog.occConstraints(spark, sf)
+    val cc = CommitLogQueries.occConstraints(spark, sf)
     val orders = Tables.orders(spark, sf)
     assert(cc.count() ===
       orders.count() + orders.where(col("o_orderkey") <= 100).count())

@@ -339,7 +339,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("substring scrub removes exactly the duplicated tokens; fixture ties to coverage") {
-    import spark.implicits._
     // planted: docs 1/2 share a 12-token run at different offsets — the
     // scrub must remove exactly those tokens from BOTH docs (the
     // remove-everywhere C4 stance), keeping the unique filler

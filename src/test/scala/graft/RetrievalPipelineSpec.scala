@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.functions.TextAnalytics
-import graft.operators.{Hybrid, Similarity}
+import graft.operators.Hybrid
 import org.apache.spark.sql.functions._
 
 /** End-to-end composition proof for the RETRIEVAL family (VERDICT r13
