@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import graft.operators.Truncate
 import java.nio.file.{Files, Path, Paths, FileAlreadyExistsException}
 import java.util.UUID
 import scala.collection.mutable
@@ -431,11 +432,18 @@ object CommitLog {
       * Empty when nothing matched. */
     def dvActions(spark: SparkSession, hits: DataFrame): Seq[Action] = {
       import org.apache.spark.sql.functions.col
-      val perFile = hits.groupBy(DvFile).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1))
+      // each task counts its own files' positions: one job, no shuffle
+      val perFile = hits.select(DvFile).as(Encoders.STRING)
+        .mapPartitions { names =>
+          val n = mutable.Map.empty[String, Long].withDefaultValue(0L)
+          names.foreach(f => n(f) += 1L)
+          n.iterator
+        }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+        .collect().groupMapReduce(_._1)(_._2)(_ + _).toSeq
       if (perFile.isEmpty) Nil
       else stage(spark, table,
-          hits.select(col(DvFile).as("file"), col(DvPos).as("pos")).repartition(1))
+          // the hits are pinned, so one task just concatenates them
+          hits.select(col(DvFile).as("file"), col(DvPos).as("pos")).coalesce(1))
         .map(_.copy(op = "dv")) ++
         perFile.sortBy(_._1).map { case (name, n) => Action("dvref", s"data/$name", n) }
     }
@@ -643,11 +651,13 @@ object CommitLog {
   private val DvFile = "__graft_dv_file"
   private val DvPos  = "__graft_dv_pos"
 
-  /** Above this many masked positions the mask side is no longer hinted
-    * broadcast (the join still works — AQE plans it); ~4M (file, pos)
-    * rows is ~200 MB of hash relation, the conventional broadcast
-    * ceiling. A table carrying more masked rows than that should be
-    * compacted (compaction materializes and retires every sidecar). */
+  /** Above this many rows a join's small side is no longer hinted
+    * broadcast (the join still works — AQE plans it); ~4M rows is
+    * ~200 MB of hash relation, the conventional broadcast ceiling. Two
+    * sides are counted against it: the masked positions of a table's
+    * deletion vectors (a table carrying more than that should be
+    * compacted — compaction materializes and retires every sidecar), and
+    * the rows of a pinned MERGE or CDC-apply source ([[Upsert]]). */
   private val DvBroadcastRows = 4L * 1000 * 1000
 
   /** Each scanned row's data-file name. A hidden metadata column is an
@@ -761,10 +771,6 @@ object CommitLog {
       stageWith(snap.checks)) ++ extra, readVersion = snap.version, snap.store)
   }
 
-  /** Stage `df` as immutable uuid-named files under `data/` and return the
-    * add-actions. Staged files are invisible until a commit references
-    * them. Spark writes a directory; each part file is moved to a flat
-    * uuid name so commits own files, not directories. */
   /** Probe count for commit-recorded bloom filters: 4 hash positions per
     * value is the classic sweet spot for ~10 bits/key sizing (~1-2% false
     * positives); the writer picks `m` (bits) to match its per-file key
@@ -837,6 +843,10 @@ object CommitLog {
     } catch { case _: Exception => None }
   }
 
+  /** Stage `df` as immutable uuid-named files under `data/` and return the
+    * add-actions. Staged files are invisible until a commit references
+    * them. Spark writes a directory; each part file is moved to a flat
+    * uuid name so commits own files, not directories. */
   private def stage(spark: SparkSession, table: String, df: DataFrame,
                     indexCol: Option[String] = None,
                     statsCols: Seq[String] = Nil,
@@ -1488,17 +1498,52 @@ object CommitLog {
     }
   }
 
-  /** MERGE and CDC apply: every row whose `keyCols` equal a key of `rows`,
-    * or of `touched` when given (a superset of the rows' keys), is
-    * replaced by the row of `rows` with its key. A touched key with no
-    * row in `rows` is deleted; a row whose key matched nothing is
-    * inserted. SQL equality: a NULL key never matches, so NULL-key rows
-    * insert and NULL-key table rows survive. */
-  private final case class Upsert(rows: DataFrame, keyCols: Seq[String],
-                                  touched: Option[DataFrame] = None) extends Change {
-    def keys: DataFrame =
-      touched.getOrElse(rows.select(keyCols.map(org.apache.spark.sql.functions.col): _*))
+  /** Helper columns of an [[Upsert]] source and of its change-row frame. */
+  private val Gone = "__graft_gone"
+  private val FromSource = "__graft_new"
+
+  /** MERGE and CDC apply over one pinned source `src` of `count` rows, at
+    * most one per key: every table row whose `keyCols` equal a source
+    * key is replaced by the source row with that key. A CDC batch's
+    * source also carries the boolean [[Gone]] column: a touched key whose
+    * last change is a delete has no new row, so its table rows are
+    * deleted. A source row whose key matched nothing is inserted. SQL
+    * equality: a NULL key never matches, so NULL-key rows insert and
+    * NULL-key table rows survive. Every join against the source is hinted
+    * broadcast while `count` is at most `ceiling`. */
+  private final case class Upsert(src: DataFrame, keyCols: Seq[String], count: Long,
+                                  ceiling: Long) extends Change {
+    import org.apache.spark.sql.functions.{broadcast, col, lit, max, not, when}
+    private val flagged = src.columns.contains(Gone)
+    private def small(df: DataFrame): DataFrame = if (count <= ceiling) broadcast(df) else df
+    /** Every touched key. */
+    def keys: DataFrame = small(src.select(keyCols.map(col): _*))
+    /** The new rows. */
+    def rows: DataFrame = if (flagged) src.where(not(col(Gone))).drop(Gone) else src
     def matchIn(rows: DataFrame): DataFrame = rows.join(keys, keyCols, "left_semi")
+
+    /** The change rows of replacing the matched rows `old`, from one
+      * frame: `old` and the source co-grouped by key. An old row is an
+      * `update_preimage`, or a `delete` when its key has no new row; a new
+      * row is an `update_postimage` when its key matched an old row and an
+      * `insert` otherwise. Only matched rows are shuffled: the semi-join
+      * that finds them is a broadcast under the ceiling, while co-grouping
+      * every row of the affected files cost more than the whole rewrite. */
+    def changes(old: Option[DataFrame]): DataFrame = old match {
+      case None => rows.withColumn("_change_type", lit("insert"))
+      case Some(o) =>
+        val both = o.withColumn(FromSource, lit(false)).withColumn(Gone, lit(false))
+          .unionByName((if (flagged) src else src.withColumn(Gone, lit(false)))
+            .withColumn(FromSource, lit(true)), allowMissingColumns = true)
+        // every old row matched, so its key (never NULL) has a source row
+        val key = org.apache.spark.sql.expressions.Window.partitionBy(keyCols.map(col): _*)
+        val changeType =
+          when(col(FromSource), when(not(col(Gone)),
+            when(max(not(col(FromSource))).over(key), "update_postimage").otherwise("insert")))
+          .otherwise(when(max(col(Gone)).over(key), "delete").otherwise("update_preimage"))
+        both.withColumn("_change_type", changeType)
+          .where(col("_change_type").isNotNull).drop(FromSource, Gone)
+    }
   }
 
   /** The one mutation path behind every DML entry point. From the change,
@@ -1523,7 +1568,9 @@ object CommitLog {
     *     dropped row, `update_preimage`/`update_postimage` for a replaced
     *     one (both images from the matched OLD rows: re-filtering the new
     *     rows would be wrong when SET touches a predicate column), and
-    *     `insert` for an upserted row whose key matched nothing;
+    *     `insert` for an upserted row whose key matched nothing; an
+    *     upsert's come from one frame, the matched OLD rows co-grouped
+    *     with its source by key ([[Upsert.changes]]);
     *   - one commit: `info(op)`, the meta action, the removes or masks,
     *     the staged files, the change files, then `extra`.
     *
@@ -1533,7 +1580,7 @@ object CommitLog {
                      dv: Boolean, indexCol: Option[String] = None, cdc: Boolean = false,
                      candidates: Option[Seq[String]] = None,
                      extra: Seq[Action] = Nil): Long = {
-    import org.apache.spark.sql.functions.{col, lit, not}
+    import org.apache.spark.sql.functions.{lit, not}
     val upsert = change.isInstanceOf[Upsert]
     if (!upsert)
       require(snap.st.live.nonEmpty, s"nothing to ${op.stripSuffix("dv")} in ${snap.table}")
@@ -1550,8 +1597,9 @@ object CommitLog {
     val (retire, matched, data) =
       if (dv) {
         // pinned: the sidecar, the refs and the change rows must see the
-        // SAME rows, even under a non-deterministic predicate
-        val hits = scanned.map(_.localCheckpoint())
+        // SAME rows, even under a non-deterministic predicate; the
+        // sidecar's per-file count is the action that materializes them
+        val hits = scanned.map(Truncate.resolve(None).mark)
         val old = hits.map(_.drop(DvFile, DvPos))
         val data = change match {
           case _: Drop    => None
@@ -1560,8 +1608,9 @@ object CommitLog {
         }
         (hits.fold(Seq.empty[Action])(snap.dvActions(spark, _)), old, data)
       } else {
-        val names = scanned.fold(Set.empty[String])(
-          _.select(DvFile).distinct().collect().map(_.getString(0)).toSet)
+        // each scan task dedups its own file names: one job, no shuffle
+        val names = scanned.fold(Set.empty[String])(_.select(DvFile).as(Encoders.STRING)
+          .mapPartitions(_.toSet.iterator)(Encoders.STRING).collect().toSet)
         val affected = files.filter(f => names.contains(Paths.get(f).getFileName.toString))
         val old = if (affected.isEmpty) None else Some(snap.masked(spark, affected))
         val data = change match {
@@ -1585,20 +1634,7 @@ object CommitLog {
           case _: Drop    => matched.map(typed(_, "delete")).toSeq
           case s: SetOver => matched.toSeq.flatMap(m =>
             Seq(typed(m, "update_preimage"), typed(s.applyTo(m), "update_postimage")))
-          case u: Upsert =>
-            val kc = u.keyCols
-            val hitKeys = matched.map(_.select(kc.map(col): _*))
-            val retired = matched.toSeq.flatMap { m =>
-              // without `touched` every matched key has a new row
-              if (u.touched.isEmpty) Seq(typed(m, "update_preimage"))
-              else {
-                val rowKeys = u.rows.select(kc.map(col): _*)
-                Seq(typed(m.join(rowKeys, kc, "left_semi"), "update_preimage"),
-                    typed(m.join(rowKeys, kc, "left_anti"), "delete"))
-              }
-            }
-            retired ++ hitKeys.map(k => typed(u.rows.join(k, kc, "left_semi"), "update_postimage")) :+
-              typed(hitKeys.fold(u.rows)(k => u.rows.join(k, kc, "left_anti")), "insert")
+          case u: Upsert  => Seq(u.changes(matched))
         }
         stageChanges(spark, snap.table,
           changes.reduce(_.unionByName(_, allowMissingColumns = true)))
@@ -1607,25 +1643,39 @@ object CommitLog {
       readVersion = snap.version, snap.store)
   }
 
-  /** The MERGE prelude shared by both forms: the table must hold rows, the
-    * source's schema must merge additively (typed conflict BEFORE staging
-    * or checkpointing; the snapshot's scans then read the evolved schema),
-    * and the source is pinned once (`localCheckpoint` — it feeds several
-    * plans and must not recompute differently per consumer) and rejected
-    * when it has duplicate keys (the MATCHED row would be ambiguous). */
-  private def mergeSource(snap: TableAt, source: DataFrame,
-                          keyCols: Seq[String]): Upsert = {
-    import org.apache.spark.sql.functions.{col, count, lit}
+  /** MERGE, both forms ([[mergeInto]] gives the shape). The table must
+    * hold rows and the source's schema must merge additively (typed
+    * conflict BEFORE anything runs; the snapshot's scans then read the
+    * evolved schema). The source is pinned lazily ([[Truncate.mark]] — it
+    * feeds several plans and must not recompute differently per
+    * consumer), so ONE aggregate both materializes it and returns its row
+    * count (the broadcast hints, against `ceiling`), its largest per-key
+    * multiplicity and, for a table clustered on the key, its key bounds. */
+  private[sources] def merge(spark: SparkSession, table: String, source: DataFrame,
+                             keyCols: Seq[String], indexCol: Option[String], cdc: Boolean,
+                             store: LogStore, dv: Boolean,
+                             ceiling: Long = DvBroadcastRows): Long = {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
     require(keyCols.nonEmpty, "MERGE needs at least one key column")
-    require(snap.version >= 0, s"${snap.table} does not exist — append first")
-    require(snap.st.live.nonEmpty, s"nothing to merge into in ${snap.table}")
+    val snap = open(table, store)
+    require(snap.version >= 0, s"$table does not exist — append first")
+    require(snap.st.live.nonEmpty, s"nothing to merge into in $table")
     snap.st.mergeSchema(source.schema)
-    val src = source.localCheckpoint()
-    val dup = src.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
-      .where(col("n") > 1).limit(1).count()
-    require(dup == 0L,
+    val src = Truncate.resolve(None).mark(source)
+    val clustered = indexCol.filter(c => keyCols == Seq(c))
+    val aggs = Seq(sum("n"), max("n")) ++ clustered.toSeq.flatMap(k =>
+      Seq(min(col(k).cast("double")), max(col(k).cast("double"))))
+    // one partition already satisfies the global aggregate: no second shuffle
+    val r = src.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
+      .coalesce(1).agg(aggs.head, aggs.tail: _*).head()
+    require(r.isNullAt(1) || r.getLong(1) <= 1L,
       s"source has duplicate keys on (${keyCols.mkString(", ")}) — MERGE match is ambiguous")
-    Upsert(src, keyCols)
+    val candidates = clustered.map(_ =>
+      if (r.isNullAt(2)) Seq.empty // all-NULL keys: nothing can match
+      else boundsKeep(snap.st, r.getDouble(2), r.getDouble(3)))
+    val rows = if (r.isNullAt(0)) 0L else r.getLong(0)
+    mutate(spark, snap, if (dv) "mergedv" else "merge", Upsert(src, keyCols, rows, ceiling),
+      dv, indexCol, cdc, candidates)
   }
 
   /** Copy-on-write row deletion (the right-to-be-forgotten primitive a
@@ -1714,10 +1764,8 @@ object CommitLog {
     * typed conflict. Returns the commit version. */
   def mergeIntoDv(spark: SparkSession, table: String, source: DataFrame,
                   keyCols: Seq[String], cdc: Boolean = false,
-                  store: LogStore = LocalStore): Long = {
-    val snap = open(table, store)
-    mutate(spark, snap, "mergedv", mergeSource(snap, source, keyCols), dv = true, cdc = cdc)
-  }
+                  store: LogStore = LocalStore): Long =
+    merge(spark, table, source, keyCols, None, cdc, store, dv = true)
 
   /** Copy-on-write UPDATE: `UPDATE <table> SET col = expr, ... WHERE
     * pred` — the log-layer form of the reference's UPDATE dispatch
@@ -1749,21 +1797,27 @@ object CommitLog {
     * the reference's UPDATE dispatch at process.py:339-366 is the
     * single-row special case of this).
     *
-    * Shape (all distributed; only FILE NAMES ever reach the driver):
-    *   1. the source is pinned once (`localCheckpoint`) — it is consumed
-    *      by several plans and must not recompute differently per consumer;
-    *   2. ambiguous-match guard: a source with duplicate keys makes
+    * Shape (all distributed; only FILE NAMES and one aggregate row ever
+    * reach the driver; each input is planned once):
+    *   1. one aggregate over the lazily pinned source ([[merge]])
+    *      materializes the pin and returns its row count, its largest
+    *      per-key multiplicity and its key bounds. A duplicate key makes
     *      MATCHED undefined — rejected up front (the same rule ANSI MERGE
-    *      and every lakehouse implementation enforces);
-    *   3. affected files = live files holding at least one matching key.
+    *      and every lakehouse implementation enforces). While the count is
+    *      under the broadcast ceiling, every join below hints the source
+    *      (or its keys) broadcast;
+    *   2. affected files = live files holding at least one matching key,
+    *      from one semi-join of the candidates against the source keys.
     *      When the table is range-clustered on the single key column
     *      (caller passes `indexCol == keyCols.head`), the candidate set is
-    *      FIRST pruned to files whose recorded bounds overlap the source's
-    *      key range — a CDC batch touching a narrow key range scans
-    *      O(batch) files, not O(table);
-    *   4. rewrite = affected rows anti-joined against source keys (the
+    *      FIRST pruned to files whose recorded bounds overlap the key
+    *      bounds — a CDC batch touching a narrow key range scans O(batch)
+    *      files, not O(table);
+    *   3. rewrite = affected rows anti-joined against source keys (the
     *      survivors), unioned with ALL source rows (updates + inserts);
     *      untouched files are not rewritten, not even read twice;
+    *   4. with CDC on, the change rows come from one frame: the matched
+    *      rows co-grouped with the source by key ([[Upsert.changes]]);
     *   5. commit remove(affected)+add(rewritten): a racing delete or
     *      compaction of the same files surfaces as the typed
     *      [[ConcurrentRewriteException]]; racing appends commute (their
@@ -1783,20 +1837,8 @@ object CommitLog {
   def mergeInto(spark: SparkSession, table: String, source: DataFrame,
                 keyCols: Seq[String], indexCol: Option[String] = None,
                 cdc: Boolean = false,
-                store: LogStore = LocalStore): Long = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    val snap = open(table, store)
-    val src = mergeSource(snap, source, keyCols)
-    // candidate files: bounds-pruned iff the table is clustered on the key
-    val candidates =
-      if (keyCols.size == 1 && indexCol.contains(keyCols.head)) {
-        val r = src.keys.agg(min(col(keyCols.head).cast("double")).as("lo"),
-                             max(col(keyCols.head).cast("double")).as("hi")).head()
-        if (r.isNullAt(0)) Seq.empty // all-NULL keys: nothing can match
-        else boundsKeep(snap.st, r.getDouble(0), r.getDouble(1))
-      } else snap.st.live.toSeq
-    mutate(spark, snap, "merge", src, dv = false, indexCol, cdc, Some(candidates))
-  }
+                store: LogStore = LocalStore): Long =
+    merge(spark, table, source, keyCols, indexCol, cdc, store, dv = false)
 
   /** Data files carrying NEW rows in versions `(fromVersion, toVersion]` —
     * the change-data feed a downstream incremental consumer tails. A
@@ -2021,15 +2063,20 @@ object CommitLog {
   /** The prelude both apply forms share. Validates the txn token, skips an
     * already-applied `(appId, batchId)` BEFORE any batch computation (a
     * replayed batch costs one log replay, zero Spark jobs), reduces the
-    * batch to the LAST relevant change per key (pinned — every consumer
-    * below must see the same rows), and applies it as one upsert whose
-    * touched keys include the deleted ones. An empty replica bootstraps
-    * from the upserts through the same path. A racer that already
-    * applied the same txn is a skip (-1). */
-  private def applyBatch(spark: SparkSession, replica: String, changes: DataFrame,
-                         keyCols: Seq[String], txn: Option[(String, Long)],
-                         store: LogStore, dv: Boolean): Long = {
-    import org.apache.spark.sql.functions.{col, row_number}
+    * batch to the LAST relevant change per key, flagged [[Gone]] when that
+    * change is a delete, and pins it lazily (every consumer below must see
+    * the same rows). One job materializes the pin and counts its rows
+    * and new rows: an empty batch, or all deletes against no replica,
+    * is a no-op; otherwise the batch applies as one upsert whose touched
+    * keys include the deleted ones, its joins hinted broadcast while the
+    * count is at most `ceiling`. An empty replica bootstraps from the new
+    * rows through the same path. A racer that already applied the same
+    * txn is a skip (-1). */
+  private[sources] def applyBatch(spark: SparkSession, replica: String, changes: DataFrame,
+                                  keyCols: Seq[String], txn: Option[(String, Long)],
+                                  store: LogStore, dv: Boolean,
+                                  ceiling: Long = DvBroadcastRows): Long = {
+    import org.apache.spark.sql.functions.{col, not, row_number}
     require(keyCols.nonEmpty, "applying changes needs key columns")
     txn.foreach { case (app, b) =>
       require(app.matches("[A-Za-z0-9_.-]+"), s"appId must be a plain token: $app")
@@ -2044,16 +2091,25 @@ object CommitLog {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols.map(col): _*)
       .orderBy(col("_commit_version").desc, col("_change_type").desc)
-    val last = relevant.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn").localCheckpoint()
-    if (last.isEmpty) return -1L
-    val upserts = last.where(col("_change_type") =!= "delete")
-      .drop("_change_type", "_commit_version")
+    val last = Truncate.resolve(None).mark(relevant.withColumn("__rn", row_number().over(w))
+      .where(col("__rn") === 1)
+      .withColumn(Gone, col("_change_type") === "delete")
+      .drop("__rn", "_change_type", "_commit_version"))
+    // each task counts its own rows and new rows: one job, no shuffle, and
+    // the pin materializes in parallel
+    val (rows, fresh) = last.select(not(col(Gone))).as(Encoders.scalaBoolean)
+      .mapPartitions { isNew =>
+        var n, m = 0L
+        isNew.foreach { b => n += 1L; if (b) m += 1L }
+        Iterator((n, m))
+      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+      .collect().foldLeft((0L, 0L)) { case ((n, m), (a, b)) => (n + a, m + b) }
+    if (rows == 0L) return -1L
     // all-deletes against no replica is a no-op
-    if (snap.version < 0 && upserts.isEmpty) return -1L
+    if (snap.version < 0 && fresh == 0L) return -1L
     val txnActs = txn.map { case (app, b) => Action("txn", app, b) }.toSeq
     try mutate(spark, snap, if (dv) "applydv" else "apply",
-      Upsert(upserts, keyCols, Some(last.select(keyCols.map(col): _*))), dv, extra = txnActs)
+      Upsert(last, keyCols, rows, ceiling), dv, extra = txnActs)
     catch { case _: TxnAlreadyApplied => -1L }
   }
 

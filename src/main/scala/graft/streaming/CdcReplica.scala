@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import graft.sources.{CommitLog, CommitLogQueries}
+import graft.sources.{CommitLog, CommitLogProvider, CommitLogQueries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import java.nio.file.Files
@@ -48,19 +48,25 @@ object CdcReplica {
     * (`setTableProperty(src, "cdc", "true")` or per-mutation flags) —
     * a change-less mutation in the window raises the typed
     * [[CommitLog.CdcGapException]] rather than letting the replica
-    * silently diverge. */
+    * silently diverge. `store` names a LogStore registered with
+    * [[CommitLogProvider.registerStore]]: the feed lists and reads the
+    * source's log through it and every apply commits to the replica
+    * through it (unset: the local store). */
   def replicaStream(spark: SparkSession, srcTable: String, replicaTable: String,
                     keyCols: Seq[String], checkpointDir: String,
                     appId: String = "cdc-replica",
                     maxVersionsPerTrigger: Option[Int] = None,
                     trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
-                    mergeOnRead: Boolean = false): StreamingQuery = {
+                    mergeOnRead: Boolean = false,
+                    store: Option[String] = None): StreamingQuery = {
+    val logStore = CommitLogProvider.storeFor(store.map("store" -> _).toMap)
     val reader = spark.readStream
       .format("graft-changefeed")
       .option("table", srcTable)
       .option("cdc", "true")
     maxVersionsPerTrigger.foreach(m =>
       reader.option("maxVersionsPerTrigger", m.toString))
+    store.foreach(reader.option("store", _))
     reader.load()
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -70,10 +76,10 @@ object CdcReplica {
         // copy-on-write. Same txn-marker exactly-once either way.
         if (mergeOnRead)
           CommitLog.applyChangesDv(batch.sparkSession, replicaTable, batch,
-            keyCols, txn = Some((appId, batchId)))
+            keyCols, txn = Some((appId, batchId)), store = logStore)
         else
           CommitLog.applyChanges(batch.sparkSession, replicaTable, batch,
-            keyCols, txn = Some((appId, batchId)))
+            keyCols, txn = Some((appId, batchId)), store = logStore)
         ()
       }
       .option("checkpointLocation", checkpointDir)

@@ -17,7 +17,7 @@ class CcJobCountSpec extends SparkSpec with JobCounting {
 
   test("dedupGroups on the fixture runs the loop-free job count") {
     Dedup.dedupGroups(spark, sf).collect() // warm: codegen, file listing
-    val jobs = jobsTagged("cc-job-count")(Dedup.dedupGroups(spark, sf).collect())
+    val (jobs, _) = countTagged("cc-job-count")(Dedup.dedupGroups(spark, sf).collect())
     assert(jobs <= LoopFreeJobs, s"dedupGroups ran $jobs Spark jobs; the loop-free plan runs $LoopFreeJobs")
   }
 }

@@ -77,6 +77,33 @@ class StreamingStoreSpec extends SparkSpec {
     assert(reads2 > reads1, "the batch feed must read commits through the store")
   }
 
+  test("the CDC replica reads its feed and commits its applies through the named store") {
+    import graft.streaming.CdcReplica
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.streaming.Trigger
+    val src = freshDir("replica_store_src")
+    val replica = freshDir("replica_store_dst")
+    CommitLog.append(spark, src, (1L to 20L).map(k => (k, s"v$k")).toDF("k", "v"))
+    CommitLog.setTableProperty(src, "cdc", "true")
+    CommitLog.mergeInto(spark, src, Seq((3L, "u3"), (30L, "i30")).toDF("k", "v"), Seq("k"))
+    CommitLog.deleteWhere(spark, src, col("k") < 2L)
+
+    val (puts0, lists0, reads0) = Counting.counts
+    val q = CdcReplica.replicaStream(spark, src, replica, Seq("k"),
+      freshDir("replica_store_ckpt"), appId = "store_replica",
+      maxVersionsPerTrigger = Some(1), trigger = Trigger.ProcessingTime("0 seconds"),
+      store = Some("spec-counting"))
+    try q.processAllAvailable() finally q.stop()
+    val (puts1, lists1, reads1) = Counting.counts
+    assert(CommitLog.latestVersion(replica) === 2L, "three non-empty batches, three applies")
+    assert(puts1 - puts0 === 3, "every apply publishes its commit through the store")
+    assert(lists1 > lists0, "the replica must list the logs through the store")
+    assert(reads1 > reads0, "the replica must read commits through the store")
+    val rows = (t: String) =>
+      CommitLog.read(spark, t).as[(Long, String)].collect().toSeq.sorted
+    assert(rows(replica) === rows(src))
+  }
+
   test("the batch feed sees a claimed-but-unpublished FencedStore tip") {
     val t = freshDir("feed_fenced")
     CommitLog.append(spark, t, (1L to 50L).toDF("id"), store = new FencedStore())
