@@ -85,10 +85,11 @@ object Ingest {
       parsed.filter(col("_corrupt_record").isNotNull)
         .select(col("_corrupt_record").as("raw"))
         .write.mode("append").text(quarantineDir)
-      parsed.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
-        .withColumn("session_from_id", split(col("capture_id"), "_").getItem(0).cast("int"))
-        .withColumn("start_ms", split(col("capture_id"), "_").getItem(1).cast("long"))
-        .localCheckpoint(true) // materialize so the scan cache can be released
+      // materialized so the scan cache can be released
+      graft.operators.Truncate.resolve(None)(
+        parsed.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
+          .withColumn("session_from_id", split(col("capture_id"), "_").getItem(0).cast("int"))
+          .withColumn("start_ms", split(col("capture_id"), "_").getItem(1).cast("long")))
     } finally parsed.unpersist()
   }
 

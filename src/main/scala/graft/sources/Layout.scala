@@ -40,6 +40,29 @@ object Layout {
     }.reduce(_ + _)
   }
 
+  /** The shared clustering shuffle: one column range-partitions directly,
+    * several interleave into a z-value first. The interleave width scales
+    * down as columns are added (`min(16, 62 / N)` bits each) so ANY
+    * column count fits one long — a 4-plus-column OPTIMIZE ZORDER is a
+    * legitimate shape, and pruning stays EXACT regardless of width: the
+    * recorded zonemap stats are raw min/max, the mask only shapes layout
+    * quality. */
+  private[sources] def zcluster(df: DataFrame, clusterCols: Seq[String],
+                                files: Int): DataFrame =
+    if (clusterCols.size == 1)
+      df.repartitionByRange(files, col(clusterCols.head))
+    else {
+      val bits = math.min(16, 62 / clusterCols.size)
+      val mask = (1L << bits) - 1L
+      // try_cast, not cast: under ANSI mode a NaN/Infinity row would fail
+      // the whole clustering job, but layout is best-effort by contract
+      // (pruning correctness comes from the recorded raw min/max, and a
+      // NULL z-value just range-partitions into the null bucket)
+      val masked = clusterCols.map(c => expr(s"try_cast($c AS BIGINT)").bitwiseAND(lit(mask)))
+      df.withColumn("__z", zvalueN(masked, bits))
+        .repartitionByRange(files, col("__z")).drop("__z")
+    }
+
   /** The same interleave as ANSI SQL, generated from the same loop. */
   def zvalue16Sql(x: String, y: String): String =
     (0 until 16).map { b =>

@@ -674,4 +674,35 @@ class CommitLogDvSpec extends SparkSpec {
     assert(back.toSeq === (0L until 10L).filter(_ != 3L)
       .map(k => (k, if (k == 5L) "new" else s"v$k")))
   }
+
+  test("a restore's synthesized inserts join only the re-added files' mask rows (two sidecars)") {
+    // F1 and F3 each carry a sidecar; a copy-on-write delete replaces F3
+    // with F3', and a restore re-adds F3. The insert side must read F3
+    // through the live masks with the mask pre-filtered to F3 — not
+    // broadcast F1's mask rows too — and the change rows stay exact.
+    val t = keyedTable(n = 30, files = 3)
+    val f1 = CommitLog.prunedFiles(t, 0d, 0d).head
+    val f3 = CommitLog.prunedFiles(t, 29d, 29d).head
+    assert(f1 != f3)
+    val f3Keys = spark.read.parquet(Paths.get(t, f3).toString).select("k").as[Long]
+      .collect().sorted.toSeq
+    val (masked, deleted) = (f3Keys.head, f3Keys.last)
+    CommitLog.deleteWhereDv(spark, t, col("k") === 0L)      // v1: sidecar over F1
+    CommitLog.deleteWhereDv(spark, t, col("k") === masked)  // v2: sidecar over F3
+    CommitLog.deleteWhere(spark, t, col("k") === deleted)   // v3: F3 replaced by F3'
+    assert(CommitLog.restore(spark, t, asOf = 2L) === 4L)   // v4: F3 back
+    val (_, feed) = CommitLog.readChangesCdc(spark, t, fromVersion = 3L)
+    val rows = feed.get.select("k", "_change_type").as[(Long, String)].collect().sorted.toSeq
+    val live = f3Keys.filter(_ != masked)
+    assert(rows === (live.map((_, "insert")) ++
+      live.filter(_ != deleted).map((_, "delete"))).sorted)
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
+    val prefilters = feed.get.queryExecution.analyzed.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+    }.flatMap(_.collect {
+      case In(a: AttributeReference, list) if a.name == "file" => list.map(_.eval().toString)
+    }).flatten
+    assert(prefilters === Seq(Paths.get(f3).getFileName.toString),
+      "the insert side's mask must be pre-filtered to the re-added file")
+  }
 }
